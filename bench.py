@@ -47,24 +47,9 @@ def main() -> None:
         except Exception as e:  # keep the bench line parseable even on a failure
             print(f"bench: query {name} failed: {e}", file=sys.stderr)
             elapsed = None
-        # Session hygiene AFTER the clock stops, charged to no query
-        # (round 12 — measurement-bug fix, documented in
-        # OPTIMIZATION_r12.md): a finished query's leaked state (persisted
-        # localCheckpoint blocks, shuffle files, broadcasts — only
-        # reclaimed when the driver JVM happens to GC) previously
-        # accumulated across the 183-query session and was REDISTRIBUTED
-        # into later queries' timings as block-manager pressure and GC
-        # pauses — the same query measured 3-6x slower mid-session than
-        # solo, with the slow SET differing run to run (r11/r12 bench
-        # maps), i.e. query N's number partly measured queries 1..N-1.
-        # reset_session_state makes the cleanup deterministic: blocking
-        # unpersist (shipped since round 9), then GC + ContextCleaner
-        # drain, so neither leaked state nor a removal storm bleeds into
-        # the next query. Earlier rounds' env-gated raw System.gc()
-        # (SPARK_GRAFT_BENCH_GC=1, large-sf artifact runs) traded leaked
-        # state for exactly that racing storm; the drain supersedes it,
-        # and the env knob now simply forces the same path it always
-        # gated (kept so the documented sf1/sf10 recipes stay valid).
+            # stop the failed query's straggler tasks before the cleanup and the next query
+            spark.sparkContext.cancelAllJobs()
+        # after the clock stops: no query pays for an earlier one's leftover blocks
         reset_session_state(spark)
         return elapsed
 

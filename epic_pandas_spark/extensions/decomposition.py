@@ -174,13 +174,3 @@ def pca_transform(
         return pd.Series(out)
 
     return df.withColumn(out_col, _project(F.col(vec_col).cast("array<double>")))
-
-
-def pca_fit_transform(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_components: int = 8,
-    out_col: str = "pca",
-) -> tuple[DataFrame, dict]:
-    model = pca_fit(df, vec_col=vec_col, n_components=n_components)
-    return pca_transform(df, model, vec_col=vec_col, out_col=out_col), model

@@ -42,16 +42,6 @@ def _hadoop_path_exists(spark, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def word_set_expr(text: Column) -> Column:
-    """Distinct-word array of the normalized text (unigram shingles).
-    NOTE: only discriminative on large vocabularies; near-dup operators
-    default to word 3-gram shingles (word_ngrams_expr), which stay
-    selective even on small-vocabulary corpora."""
-    return F.array_distinct(
-        F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " ")
-    )
-
-
 def exact_dedup(df: DataFrame, text_col: str, id_col: str, keep_by=None) -> DataFrame:
     """Keep one row per normalized-text group. The shuffle key is the
     64-bit fingerprint, so payload movement is O(ids), not O(text).

@@ -81,8 +81,3 @@ def drop_null_array_elements(df: DataFrame, array_col: str) -> DataFrame:
             lambda x: x.isNotNull() & F.coalesce(~F.isnan(x.try_cast("double")), F.lit(True)),
         ),
     )
-
-
-def coalesce_scalar(col: Column, default) -> Column:
-    """`fillnullscalar` (numpy.py:58-72): scalar coalesce as an expression."""
-    return F.coalesce(col, F.lit(default))

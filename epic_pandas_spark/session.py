@@ -13,9 +13,15 @@ harness and a real multi-executor cluster:
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g, so the default driver heap
+    fits the host it runs on."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
 
 
 def get_spark(
@@ -59,19 +65,15 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         # driver testdata writes events.ts as parquet timestamp[ns], which
         # Spark's vectorized reader rejects; read as long and convert in
         # load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        # shuffle cleanup is the ONE ContextCleaner path that is
-        # fire-and-forget by default; making it blocking means that once
-        # the cleaner's queue is observed empty, finished queries' shuffle
-        # files and map-output state are actually GONE — the property
-        # reset_session_state() relies on. Only the cleaner thread slows
-        # down; queries never wait on it.
-        .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -111,86 +113,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return df
 
 
-def reset_session_state(spark: SparkSession, drain_timeout: float = 10.0) -> None:
-    """Deterministically release the state a finished query leaves behind
-    in a long-lived session — the between-jobs hygiene of a query service.
-
-    Spark reclaims shuffle files, broadcast blocks and accumulators only
-    when the driver JVM garbage-collects the corresponding dependency
-    objects (ContextCleaner is GC-triggered, see its class doc). A session
-    that runs hundreds of queries back-to-back on a large heap GCs rarely,
-    so dozens of queries' shuffle/broadcast state piles up in the block
-    manager and on disk; when a GC finally fires, the resulting removal
-    storm runs CONCURRENTLY with whatever query is executing. Both effects
-    were measured here at several-x per-query inflation late in long
-    sessions (round 11/12 bench maps: the same query 3-6x slower
-    mid-session than solo, the slow set differing run to run).
-
-    This makes the cleanup deterministic and charges it to no query:
-
-    1. unpersist every persisted RDD (blocking) — localCheckpoint blocks;
-    2. drop this Python process's cached py4j references to finished
-       plans (gc.collect()) so the JVM objects become unreachable;
-    3. System.gc() to enqueue the dead references with ContextCleaner;
-    4. wait until the cleaner's reference buffer stops shrinking — i.e.
-       all newly dead shuffle/broadcast/accumulator state is processed.
-       With spark.cleaner.referenceTracking.blocking.shuffle=true (set by
-       get_spark) a drained buffer means removals have COMPLETED, so no
-       removal storm races the next query.
-
-    The buffer is reached via reflection (it is private); if the Spark
-    version moved it, fall back to GC plus a short fixed sleep — strictly
-    better than the undrained GC this replaces. No data is cached across
-    calls and nothing a future query needs is touched: persisted RDDs,
-    shuffles and broadcasts of FINISHED queries are garbage by definition
-    (a caller holding a live DataFrame reference keeps its state alive —
-    reachable objects are never enqueued)."""
-    import gc as _pygc
-
-    mode = os.environ.get("EPS_RESET_MODE", "drain")
-    debug = os.environ.get("EPS_RESET_DEBUG") == "1"
-    t0 = time.time()
-    sc = spark.sparkContext
-    for rdd in dict(sc._jsc.getPersistentRDDs()).values():
+def reset_session_state(spark: SparkSession) -> None:
+    """Release every persisted RDD (the localCheckpoint blocks operators
+    leave behind), so a long session does not accumulate finished queries'
+    blocks in the block manager."""
+    for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
         rdd.unpersist(True)  # blocking: no removal racing the next query
-    if mode == "unpersist":
-        return
-    _pygc.collect()
-    cleaner_opt = sc._jsc.sc().cleaner()
-    buf = None
-    if mode == "drain" and not cleaner_opt.isEmpty():
-        try:
-            field = cleaner_opt.get().getClass().getDeclaredField("referenceBuffer")
-            field.setAccessible(True)
-            buf = field.get(cleaner_opt.get())
-        except Exception:
-            buf = None
-    size0 = buf.size() if buf is not None else -1
-    sc._jvm.System.gc()
-    if buf is None:
-        if mode == "drain":
-            time.sleep(0.3)
-        return
-    # drain: the buffer never reaches 0 (live queries keep reachable
-    # references enqueued-in-waiting), so wait for it to go STABLE —
-    # no shrinking observed for a full second after the GC (single
-    # removals can take >50ms, so a short stability window exits while
-    # the cleaner is still grinding through the storm).
-    last = buf.size()
-    stable = 0
-    deadline = time.time() + drain_timeout
-    while time.time() < deadline and stable < 20:
-        time.sleep(0.05)
-        size = buf.size()
-        if size >= last:
-            stable += 1
-        else:
-            stable = 0
-        last = size
-    if debug:
-        import sys
-
-        print(
-            f"reset_session_state: buf {size0} -> {last} in {time.time()-t0:.2f}s",
-            file=sys.stderr,
-        )

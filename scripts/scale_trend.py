@@ -34,7 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from epic_pandas_spark.session import get_spark
+from epic_pandas_spark.session import get_spark, reset_session_state
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -157,13 +157,7 @@ def run_tier(sf_dir: str, queries: list[str]) -> dict[str, float | None]:
         except Exception as e:  # noqa: BLE001 - keep report parseable
             out[q] = None
             print(f"trend: {q} failed: {e}", file=sys.stderr)
-        # drop leaked localCheckpoint blocks after the clock stops (same
-        # session-tail hygiene as bench.py). NO forced GC here: the GC's
-        # cost/benefit flips with tier size (helps sf1+, hurts sub-second
-        # queries via the post-GC cleanup storm), so applying it uniformly
-        # would deflate small-tier times and flatter every growth ratio.
-        for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
-            rdd.unpersist(True)  # blocking: no removal storm racing the next query
+        reset_session_state(spark)  # after the clock stops, as in bench.py
     return out
 
 
