@@ -11,9 +11,12 @@ vanishes. `solo_confirmed[q]` carries the solo seconds next to the
 session seconds — future verdicts read the artifact instead of
 re-deriving.
 
+Solo runs go through measure.bench, which records the WARM second
+execution and refuses a run that crashed after printing JSON.
+
 Usage:
-    python scripts/bench_map.py --prev BENCH_R5_SF01.json \
-        --out BENCH_R6_SF01.json
+    python scripts/bench_map.py --prev BENCH_R11_SF01.json \
+        --out BENCH_R12_SF01.json
 """
 
 from __future__ import annotations
@@ -21,60 +24,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
-
-
-def run_bench(only: list[str] | None = None) -> dict:
-    """One bench.py run in a FRESH JVM (fresh python, fresh session).
-    Solo runs set SPARK_GRAFT_BENCH_REPEAT=2 so the recorded number is
-    the WARM second execution — a single cold query otherwise pays the
-    session's lazy init (codegen/Arrow/Python-worker spawn), which
-    inflates sub-second queries several-fold and would read as a fake
-    'confirmed regression'."""
-    env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if only:
-        env["SPARK_GRAFT_BENCH_ONLY"] = ",".join(only)
-        env["SPARK_GRAFT_BENCH_REPEAT"] = "2"
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        capture_output=True, text=True, env=env, cwd=REPO,
-    )
-    sys.stderr.write(proc.stderr[-2000:])
-    lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-    if not lines:
-        raise RuntimeError(f"bench.py produced no JSON (rc={proc.returncode})")
-    return json.loads(lines[-1])
-
-
-def host_baseline() -> dict:
-    """Fixed deterministic micro-workloads timed on THIS host, recorded
-    in the artifact so cross-round map comparisons can separate
-    host-speed drift (different VM/day/host contention per round — the
-    round-9 map measured a UNIFORM ~1.2-1.4x median elevation across
-    untouched queries on two independent idle-machine runs) from real
-    per-query regressions: if the baseline moved by ~the same factor,
-    the map moved with the host."""
-    import time
-
-    import numpy as np
-
-    a = np.random.default_rng(7).standard_normal((2048, 2048))
-    t0 = time.perf_counter()
-    for _ in range(3):
-        a = a @ a * 1e-3  # keep magnitudes bounded
-    gemm = round(time.perf_counter() - t0, 4)
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i ^ (i >> 3)
-    pyloop = round(time.perf_counter() - t0, 4)
-    return {"numpy_gemm_2048_sec": gemm, "python_loop_5m_sec": pyloop}
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
+import measure
 
 
 def main() -> None:
@@ -88,7 +41,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    full = run_bench()
+    full = measure.bench()
     cur = full["queries"]
 
     prev: dict[str, float] = {}
@@ -105,7 +58,7 @@ def main() -> None:
     for q in outliers:
         base = q.removesuffix("_witness")
         try:
-            r = run_bench(only=[base])
+            r = measure.bench(only=[base])
             key = q if q in r["queries"] else base
             solo[q] = {
                 "prev_sec": prev[q],
@@ -121,7 +74,7 @@ def main() -> None:
     full["solo_confirmed"] = solo
     full["solo_threshold"] = args.threshold
     full["prev_map"] = args.prev
-    full["host_baseline"] = host_baseline()
+    full["host_baseline"] = measure.host_baseline()
     with open(args.out, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
     print(json.dumps({"out": args.out, "n_queries": len(cur),

@@ -6,31 +6,17 @@ against the candidate-pair curve instead of the row curve. The round-7
 artifact showed 35.8x wall at 1000x rows with no in-artifact way to tell
 plan regression from pair-density growth; this closes that.
 
-Each tier runs in a fresh JVM (same rationale as scale_trend.py: a
-session at the tail of many queries overstates the biggest tier).
-
 Usage: python scripts/edit_trend.py > SCALE_TREND_R8_EDIT.json
 """
 
 from __future__ import annotations
 
 import json
-import os
-import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
-TIERS = [
-    ("sf0.01", os.path.join(REPO, ".scaledata", "sf0.01"), 1),
-    ("sf0.1", os.path.join(REPO, ".scaledata", "sf0.1"), 10),
-    ("sf1", os.path.join(REPO, ".scaledata", "sf1"), 100),
-    ("sf10", os.path.join(REPO, ".scaledata", "sf10"), 1000),
-]
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
+import measure
 
 
 def _strs(spark, sf_dir: str):
@@ -76,12 +62,8 @@ def run_tier(sf_dir: str) -> dict:
         edit_distance_candidate_stats,
         edit_distance_pairs,
     )
-    from epic_pandas_spark.session import get_spark
 
-    spark = get_spark(app_name="edit_trend")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()  # warm footers
-
+    spark = measure.session("edit_trend", sf_dir, "documents")
     t0 = time.monotonic()
     n_pairs = edit_distance_pairs(_strs(spark, sf_dir), "s", "id", max_edits=2).count()
     wall = round(time.monotonic() - t0, 3)
@@ -91,37 +73,13 @@ def run_tier(sf_dir: str) -> dict:
     return {"wall_sec": wall, "n_output_pairs": n_pairs, **stats}
 
 
-def _last_json(stdout: str) -> dict:
-    """Parse the child's result line: the JVM can print warnings to stdout
-    (e.g. incubator-module notices under a larger heap), so take the LAST
-    line that parses as a JSON object."""
-    for line in reversed(stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            try:
-                return json.loads(line)
-            except ValueError:
-                continue
-    raise ValueError(f"no JSON line in child stdout: {stdout[-500:]!r}")
-
-
 def main() -> None:
     evidence_lock.acquire("edit_trend")
     if len(sys.argv) > 1 and sys.argv[1] == "--tier":
         print(json.dumps(run_tier(sys.argv[2])))
         return
-    tiers: dict[str, dict] = {}
-    for label, sf_dir, mult in TIERS:
-        if not os.path.isdir(sf_dir):
-            print(f"skip {label}: {sf_dir} missing", file=sys.stderr)
-            continue
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--tier", sf_dir],
-            capture_output=True, text=True, check=True,
-        )
-        tiers[label] = {"rows_multiplier": mult, **_last_json(proc.stdout)}
-        print(f"{label}: {tiers[label]}", file=sys.stderr)
-    base = tiers.get("sf0.01")
+    tiers = measure.over_tiers(__file__, ["sf0.01", "sf0.1", "sf1", "sf10"])
+    measure.ratios(tiers, wall="wall_sec", candidate="n_candidate_pairs")
     report = {
         "query": "edit_distance_pairs_2",
         "tiers": tiers,
@@ -134,15 +92,6 @@ def main() -> None:
             "longer multiplies the block join."
         ),
     }
-    if base:
-        for label, t in tiers.items():
-            if label == "sf0.01":
-                continue
-            t["wall_ratio_vs_sf0.01"] = round(t["wall_sec"] / base["wall_sec"], 2)
-            if base["n_candidate_pairs"]:
-                t["candidate_ratio_vs_sf0.01"] = round(
-                    t["n_candidate_pairs"] / base["n_candidate_pairs"], 2
-                )
     print(json.dumps(report, indent=1))
 
 

@@ -17,7 +17,7 @@ The unguarded path is priced only where it is survivable (pair output
 fits this host); above that it is SKIPPED with the projected output size
 recorded — the point of the trend is that the default no longer runs it.
 
-Each tier runs in a fresh JVM. Usage:
+Usage:
   python scripts/passages_trend.py                  # regular tiers
   python scripts/passages_trend.py --skew           # planted-boilerplate tiers
   python scripts/passages_trend.py --skew sf0.1,sf1 # subset
@@ -26,22 +26,11 @@ Each tier runs in a fresh JVM. Usage:
 from __future__ import annotations
 
 import json
-import os
-import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
-
-TIERS = [
-    ("sf0.1", os.path.join(REPO, ".scaledata", "sf0.1"), 1),
-    ("sf1", os.path.join(REPO, ".scaledata", "sf1"), 10),
-    ("sf10", os.path.join(REPO, ".scaledata", "sf10"), 100),
-]
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
+import measure
 
 BOILER = (
     "copyright notice all rights reserved unauthorized reproduction "
@@ -85,10 +74,8 @@ def run_tier(sf_dir: str, skew: bool) -> dict:
         _normalized_text_expr,
         repeated_passage_pairs,
     )
-    from epic_pandas_spark.session import get_spark
 
-    spark = get_spark(app_name="passages_trend")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("passages_trend", sf_dir)
     u = _corpus(spark, sf_dir, skew)
     n_in = u.count()  # warms footers too
     n_copies = u.filter(F.col("doc_id") >= 1000000).count()
@@ -206,76 +193,25 @@ def run_tier(sf_dir: str, skew: bool) -> dict:
     return res
 
 
-def _host_baseline() -> dict:
-    import time as _t
-
-    import numpy as np
-
-    a = np.random.default_rng(7).standard_normal((2048, 2048))
-    t0 = _t.perf_counter()
-    for _ in range(3):
-        a = a @ a * 1e-3
-    gemm = round(_t.perf_counter() - t0, 4)
-    t0 = _t.perf_counter()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i ^ (i >> 3)
-    pyloop = round(_t.perf_counter() - t0, 4)
-    return {"numpy_gemm_2048_sec": gemm, "python_loop_5m_sec": pyloop}
-
-
-def _last_json(stdout: str) -> dict:
-    for line in reversed(stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            try:
-                return json.loads(line)
-            except ValueError:
-                continue
-    raise ValueError(f"no JSON line in child stdout: {stdout[-500:]!r}")
-
-
 def main() -> None:
     evidence_lock.acquire("passages_trend")
-    if len(sys.argv) > 2 and sys.argv[1] in ("--tier", "--skew-tier"):
-        print(json.dumps(run_tier(sys.argv[2], sys.argv[1] == "--skew-tier")))
+    if sys.argv[1:2] == ["--tier"]:
+        res = run_tier(sys.argv[2], "--skew" in sys.argv[3:])
+        print(json.dumps({**res, "host_baseline": measure.host_baseline()}))
         return
     skew = sys.argv[1:2] == ["--skew"]
-    only = None
+    labels = ["sf0.1", "sf1", "sf10"]
     if len(sys.argv) > 2 and sys.argv[1] in ("--tiers", "--skew"):
-        only = set(sys.argv[2].split(","))
-    tiers: dict[str, dict] = {}
-    for label, sf_dir, mult in TIERS:
-        if only is not None and label not in only:
-            continue
-        if not os.path.isdir(sf_dir):
-            print(f"skip {label}: {sf_dir} missing", file=sys.stderr)
-            continue
-        proc = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--skew-tier" if skew else "--tier",
-                sf_dir,
-            ],
-            capture_output=True, text=True, check=True,
-        )
-        tiers[label] = {
-            "rows_multiplier": mult,
-            **_last_json(proc.stdout),
-            "host_baseline": _host_baseline(),
-        }
-        print(f"{label}: {tiers[label]}", file=sys.stderr)
+        labels = [l for l in labels if l in sys.argv[2].split(",")]
+    tiers = measure.over_tiers(
+        __file__, labels, extra=("--skew",) if skew else (), base="sf0.1"
+    )
+    # a projection-skipped tier has no wall to ratio
+    walls = {label: t["guarded_default"].get("wall_sec") for label, t in tiers.items()}
     base_label = next(iter(tiers), None)
-    if base_label:
-        base = tiers[base_label].get("guarded_default", {})
-        for label, t in tiers.items():
-            cur = t.get("guarded_default", {})
-            # a projection-skipped tier has no wall to ratio
-            if label != base_label and "wall_sec" in cur and "wall_sec" in base:
-                t["wall_ratio_vs_" + base_label] = round(
-                    cur["wall_sec"] / base["wall_sec"], 2
-                )
+    for label, t in tiers.items():
+        if label != base_label and walls[label] and walls[base_label]:
+            t["wall_ratio_vs_" + base_label] = round(walls[label] / walls[base_label], 2)
     report = {
         "query": "repeated_passage_pairs" + ("_boilerplate_skew" if skew else ""),
         "tiers": tiers,

@@ -11,15 +11,13 @@ Stages (each in a fresh process, same rationale as scale_trend):
   3. ROBUSTNESS.json           robustness_probe.py
   4. BENCH_R{N}_SF01.json      bench_map.py (solo-confirm protocol)
   5. PLAN_AUDIT.md             plan_audit.py
-then a freshness audit: every artifact must cover exactly the registry's
-query set. Exit 0 only if all stages succeeded AND all counts line up.
-tests/test_evidence_freshness.py re-reads the committed artifacts and
-fails CI on the same condition, so a stale artifact can't be committed
-silently.
+then the freshness audit, which is a run of
+tests/test_evidence_freshness.py (the same gate tier-1 CI runs): exit 0
+only if all stages succeeded AND that test passes.
 
 Usage:
-    python scripts/refresh_evidence.py --bench-out BENCH_R8_SF01.json \
-        [--prev BENCH_R7_SF01.json] [--skip oracle_sf01,robustness,...]
+    python scripts/refresh_evidence.py --bench-out BENCH_R12_SF01.json \
+        [--prev BENCH_R11_SF01.json] [--skip oracle_sf01,robustness,...]
 """
 
 from __future__ import annotations
@@ -30,82 +28,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
-
-
-def registry_names() -> set[str]:
-    from epic_pandas_spark.plans.registry import REGISTRY
-
-    return set(REGISTRY)
-
-
-def artifact_names(path: str) -> set[str] | None:
-    """The query-name set an evidence artifact covers, or None if the
-    file is missing/unreadable. Handles each artifact's shape."""
-    full = os.path.join(REPO, path)
-    if not os.path.exists(full):
-        return None
-    if path.endswith(".md"):  # PLAN_AUDIT.md: one `| name |` row per query
-        names = set()
-        with open(full) as f:
-            for line in f:
-                if line.startswith("| ") and not line.startswith("| ---"):
-                    cell = line.split("|")[1].strip().strip("`")
-                    if cell and cell not in ("query", ""):
-                        names.add(cell)
-        return names
-    with open(full) as f:
-        data = json.load(f)
-    if "queries" in data and isinstance(data["queries"], dict):
-        return set(data["queries"])
-    if "results" in data and isinstance(data["results"], dict):
-        return set(data["results"])
-    if "counts" in data and isinstance(data["counts"], dict):
-        return set(data["counts"])
-    # flat {name: {...}} map (driver CORRECTNESS shape)
-    return {k for k, v in data.items() if isinstance(v, dict)}
-
-
-def audit(bench_out: str) -> list[str]:
-    """Freshness failures: artifact -> missing/extra names vs registry.
-    ROBUSTNESS.json carries only a count (no per-query map), so it is
-    checked on n_queries; every other artifact is checked name-by-name."""
-    reg = registry_names()
-    problems = []
-    for path in [
-        "ORACLE_CHECK.json",
-        "ORACLE_CHECK_SF01.json",
-        bench_out,
-        "PLAN_AUDIT.md",
-    ]:
-        names = artifact_names(path)
-        if names is None:
-            problems.append(f"{path}: missing")
-            continue
-        missing = reg - names
-        # bench.py times the self-witnessing twins of the approx sketches as
-        # separate `*_witness` rows; they are bench-only, not registry names
-        extra = {n for n in names - reg if not n.endswith("_witness")}
-        if missing:
-            problems.append(f"{path}: missing {sorted(missing)}")
-        if extra:
-            problems.append(f"{path}: stale extras {sorted(extra)}")
-    rob = os.path.join(REPO, "ROBUSTNESS.json")
-    if not os.path.exists(rob):
-        problems.append("ROBUSTNESS.json: missing")
-    else:
-        with open(rob) as f:
-            data = json.load(f)
-        if data.get("n_queries") != len(reg):
-            problems.append(
-                f"ROBUSTNESS.json: n_queries={data.get('n_queries')} "
-                f"!= registry {len(reg)}"
-            )
-    return problems
 
 
 def sync_coverage_md() -> None:
@@ -145,7 +70,7 @@ def run(cmd: list[str], label: str) -> None:
 def main() -> int:
     evidence_lock.acquire("refresh_evidence")
     ap = argparse.ArgumentParser()
-    ap.add_argument("--bench-out", required=True, help="e.g. BENCH_R8_SF01.json")
+    ap.add_argument("--bench-out", required=True, help="e.g. BENCH_R12_SF01.json")
     ap.add_argument("--prev", default=None, help="previous bench map for solo-confirm")
     ap.add_argument("--skip", default="", help="comma list: oracle,oracle_sf01,"
                     "robustness,bench,plan_audit (audit always runs)")
@@ -177,15 +102,14 @@ def main() -> int:
         run([py, "scripts/plan_audit.py"], "plan audit")
 
     sync_coverage_md()
-    problems = audit(args.bench_out)
-    if problems:
-        print("FRESHNESS FAIL:", file=sys.stderr)
-        for p in problems:
-            print(f"  {p}", file=sys.stderr)
-        return 1
-    n = len(registry_names())
-    print(f"FRESHNESS OK: all artifacts cover the full {n}-query registry")
-    return 0
+    # the audit IS the tier-1 freshness test, so the two cannot drift
+    audit = subprocess.run(
+        [py, "-m", "pytest", "-q", "-p", "no:cacheprovider",
+         "tests/test_evidence_freshness.py"],
+        cwd=REPO,
+    )
+    print(f"FRESHNESS {'FAIL' if audit.returncode else 'OK'}")
+    return audit.returncode
 
 
 if __name__ == "__main__":

@@ -14,7 +14,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure  # (scripts/ is sys.path[0] when run as a file)
 
 
 def counts_with(builder_tweaks, sf_dir: str) -> dict[str, int]:
@@ -49,20 +49,13 @@ def main() -> None:
         )
         print(json.dumps(counts_with(tweaks, sf_dir)))
         return
-    # "both": compare via two subprocesses (session configs are sticky in
-    # one JVM, so each scenario needs a fresh python process)
-    import subprocess
-
-    res = {}
-    for scenario in ("default", "tuned"):
-        p = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), scenario],
-            capture_output=True,
-            text=True,
-            env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-        )
-        line = p.stdout.strip().splitlines()[-1] if p.stdout.strip() else "{}"
-        res[scenario] = json.loads(line)
+    # "both": compare via two fresh-JVM children (session configs are
+    # sticky in one JVM)
+    env = {**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir}
+    res = {
+        scenario: measure.child([sys.executable, os.path.abspath(__file__), scenario], env)
+        for scenario in ("default", "tuned")
+    }
     names = sorted(set(res["default"]) | set(res["tuned"]))
     mismatches = [
         {"query": n, "default": res["default"].get(n), "tuned": res["tuned"].get(n)}

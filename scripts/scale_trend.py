@@ -1,12 +1,8 @@
 """100x growth-trend probe: time the most expensive registry queries at
-sf0.01, sf0.1 and sf1 — ALL generated by scripts/gen_scale_data.py so
-every tier comes from one data-generating process — and report the
-per-query wall-time growth curve. (Earlier rounds used driver parquet
-for the two small tiers; with the round-5 Zipf document vocabulary the
-generated corpus is natural-text-shaped while the driver corpus is a
-closed 30-word vocabulary, and mixing the two regimes across tiers
-would corrupt exactly the dedup-family ratios this probe exists to
-measure. Correctness still gates on driver parquet via oracle_check.)
+sf0.01, sf0.1 and sf1 — ALL generated by scripts/gen_scale_data.py, so
+the dedup family never mixes the generated Zipf corpus with the driver's
+closed 30-word one across tiers — and report the per-query wall-time
+growth curve. Correctness still gates on driver parquet (oracle_check).
 
 This is the direct, measured answer to "would this plan survive a 100x
 scale-up" — a query whose time grows ~linearly (or sublinearly) in rows
@@ -27,25 +23,13 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from epic_pandas_spark.session import get_spark, reset_session_state
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
-
-# (label, dir, lineitem-rows relative to sf0.01)
-TIERS = [
-    ("sf0.01", os.path.join(REPO, ".scaledata", "sf0.01"), 1),
-    ("sf0.1", os.path.join(REPO, ".scaledata", "sf0.1"), 10),
-    ("sf1", os.path.join(REPO, ".scaledata", "sf1"), 100),
-]
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
+import measure
 
 # The most expensive registry queries (r3 bench profile) plus the TPC-H
 # headliners and one representative per scale-path family.
@@ -121,51 +105,37 @@ QUADRATIC_SEMANTICS = {
         "The oriented-wedge plan keeps work at O(m^1.5) even then"
     ),
 }
-# (Round-4 carried a VOCAB_SATURATION annotation set here: the old
-# 30-word corpus saturated the shingle space, making the dedup family's
-# candidate pairs grow quadratically with sf regardless of plan. The
-# round-5 generator draws from an sf-scaled Zipf vocabulary, so the
-# gram space stays open, per-shingle doc frequency stays ~flat, and the
-# dedup-family ratios now measure the PLANS — no annotation needed.)
-VOCAB_SATURATION: set[str] = set()
+
+# report key -> (smaller tier, larger tier) of a wall-time ratio
+RATIOS = {
+    "ratio_10x": ("sf0.1", "sf1"),
+    "ratio_100x": ("sf0.01", "sf1"),
+    "ratio_100x_bench": ("sf0.1", "sf10"),
+    "ratio_1000x": ("sf0.01", "sf10"),
+    "ratio_10000x": ("sf0.01", "sf100"),
+    "ratio_10x_last_decade": ("sf10", "sf100"),
+}
 
 
 def run_tier(sf_dir: str, queries: list[str]) -> dict[str, float | None]:
-    """Worker mode: time the queries at one sf_dir in THIS process and
-    print one JSON line. Each tier gets a fresh JVM — a session that has
-    already executed a hundred queries carries checkpointed RDDs and GC
-    pressure that overstate whatever runs last (measured: q1 at sf10 is
-    7.7 s in a fresh JVM vs 135 s at the tail of a 128-query session),
-    which would bias exactly the biggest tier of the trend."""
-    spark = get_spark(app_name="scale_trend")
+    """Child of measure.over_tiers: the queries' seconds at one sf_dir."""
     from epic_pandas_spark.plans.registry import REGISTRY
 
+    # spot tiers may carry only the tables their queries read
+    spark = measure.session("scale_trend", sf_dir, "lineitem", "documents")
     os.environ["EPS_SKIP_WITNESS"] = "1"
-    # warm parquet footers so the first query doesn't pay session startup
-    # (spot tiers may carry only the tables their queries read — fall back)
-    for warm in ("lineitem", "documents"):
-        if os.path.exists(f"{sf_dir}/{warm}.parquet"):
-            spark.read.parquet(f"{sf_dir}/{warm}.parquet").count()
-            break
     out: dict[str, float | None] = {}
     for q in queries:
-        fn, _ = REGISTRY[q]
-        t0 = time.perf_counter()
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            out[q] = round(time.perf_counter() - t0, 3)
+            out[q] = round(measure.timed(spark, REGISTRY[q][0], sf_dir)["sec"], 3)
         except Exception as e:  # noqa: BLE001 - keep report parseable
             out[q] = None
             print(f"trend: {q} failed: {e}", file=sys.stderr)
-        reset_session_state(spark)  # after the clock stops, as in bench.py
     return out
 
 
 def main() -> None:
     evidence_lock.acquire("scale_trend")
-    import argparse
-    import subprocess
-
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--add-tier", action="append", default=[],
@@ -176,65 +146,41 @@ def main() -> None:
         "--only", default=None,
         help="comma-separated subset of TREND_QUERIES to run",
     )
-    ap.add_argument("--tier-worker", default=None, help=argparse.SUPPRESS)
+    ap.add_argument("--tier", default=None, help=argparse.SUPPRESS)
     args = ap.parse_args()
     queries = (
         [q for q in args.only.split(",") if q] if args.only else TREND_QUERIES
     )
-    if args.tier_worker:
-        print(json.dumps(run_tier(args.tier_worker, queries)))
+    if args.tier:
+        print(json.dumps(run_tier(args.tier, queries)))
         return
 
-    tiers = list(TIERS)
-    for spec in args.add_tier:
-        label, d = spec.split(":", 1)
-        mult = round(100 * float(label.replace("sf", "")))
-        tiers.append((label, d, mult))
-
+    per_tier = measure.over_tiers(
+        __file__, ["sf0.01", "sf0.1", "sf1", *args.add_tier],
+        extra=("--only", ",".join(queries)),
+    )
+    mults = {label: t.pop("rows_multiplier") for label, t in per_tier.items()}
     results: dict[str, dict[str, float]] = {q: {} for q in queries}
-    for label, sf_dir, _mult in tiers:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__),
-             "--tier-worker", sf_dir, "--only", ",".join(queries)],
-            capture_output=True, text=True,
-        )
-        sys.stderr.write(proc.stderr[-2000:])
-        line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-        for q, sec in json.loads(line).items():
+    for label, t in per_tier.items():
+        for q, sec in t.items():
             results[q][label] = sec
 
-    report = {"tiers": {l: m for l, _, m in tiers}, "queries": {}}
+    report = {"tiers": mults, "queries": {}}
     for q, t in results.items():
         row = dict(t)
-        if t.get("sf0.1") and t.get("sf1"):
-            row["ratio_10x"] = round(t["sf1"] / t["sf0.1"], 2)
-        if t.get("sf0.01") and t.get("sf1"):
-            row["ratio_100x"] = round(t["sf1"] / t["sf0.01"], 2)
-        if t.get("sf0.1") and t.get("sf10"):
-            row["ratio_100x_bench"] = round(t["sf10"] / t["sf0.1"], 2)
-        if t.get("sf0.01") and t.get("sf10"):
-            row["ratio_1000x"] = round(t["sf10"] / t["sf0.01"], 2)
-        if t.get("sf0.01") and t.get("sf100"):
-            row["ratio_10000x"] = round(t["sf100"] / t["sf0.01"], 2)
-        if t.get("sf10") and t.get("sf100"):
-            row["ratio_10x_last_decade"] = round(t["sf100"] / t["sf10"], 2)
+        for name, (lo, hi) in RATIOS.items():
+            if t.get(lo) and t.get(hi):
+                row[name] = round(t[hi] / t[lo], 2)
         if q in QUADRATIC_SEMANTICS:
             row["note"] = QUADRATIC_SEMANTICS[q]
-        elif q in VOCAB_SATURATION:
-            row["note"] = (
-                "synthetic-vocab artifact: the 30-word corpus saturates "
-                "the shingle space, so per-shingle doc frequency grows "
-                "linearly with sf and candidates quadratically; natural "
-                "text keeps df ~flat and this plan linear"
-            )
         report["queries"][q] = row
     # sf0.1 -> sf1 is 10x the rows, so ratio_10x ~ 10 IS linear scaling
     # (constant per-row cost); flag only clearly-superlinear growth that
-    # is not explained by quadratic semantics or the vocab artifact.
+    # is not explained by quadratic semantics.
     flagged = sorted(
         (q for q, r in report["queries"].items()
          if r.get("ratio_10x") and r["ratio_10x"] > 15
-         and q not in QUADRATIC_SEMANTICS and q not in VOCAB_SATURATION),
+         and q not in QUADRATIC_SEMANTICS),
         key=lambda q: -report["queries"][q]["ratio_10x"],
     )
     report["superlinear_10x"] = flagged

@@ -1,6 +1,7 @@
 """Shuffle-byte audit: run representative registry queries at two scale
 factors and measure the SHUFFLE WRITE BYTES each one actually moves
-(from the Spark status REST API), reporting bytes-growth vs row-growth.
+(from the driver's status store, through measure.timed's job-group
+counters), reporting bytes-growth vs row-growth in decimal MB.
 
 This turns the per-plan claims in PLAN_AUDIT.md ("the shuffle carries
 8-byte hashes, not payloads"; "aggregation state is sketch-sized") into
@@ -18,18 +19,12 @@ from __future__ import annotations
 
 import json
 import os
-import sys
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure  # (scripts/ is sys.path[0] when run as a file)
 
-from epic_pandas_spark.session import get_spark
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-TIERS = [
+SF_DIRS = [
     ("sf0.1", "/root/testdata/sf0.1"),
-    ("sf1", os.path.join(REPO, ".scaledata", "sf1")),
+    ("sf1", os.path.join(measure.SCALEDATA, "sf1")),
 ]
 
 # one representative per shuffle-discipline family
@@ -68,37 +63,18 @@ AUDIT_QUERIES = [
 ]
 
 
-def total_shuffle_bytes(ui_base: str) -> tuple[int, int]:
-    """Sum shuffle write/read bytes over all completed stages."""
-    apps = json.load(urllib.request.urlopen(f"{ui_base}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(f"{ui_base}/api/v1/applications/{app_id}/stages")
-    )
-    w = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    r = sum(s.get("shuffleReadBytes", 0) for s in stages)
-    return w, r
-
-
 def main() -> None:
-    os.environ["EPS_SKIP_WITNESS"] = "1"
-    spark = get_spark(
-        app_name="shuffle_audit", extra_conf={"spark.ui.enabled": "true"}
-    )
-    ui = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[-1]}"
     from epic_pandas_spark.plans.registry import REGISTRY
+    from epic_pandas_spark.session import get_spark
 
-    out: dict[str, dict[str, dict[str, int]]] = {q: {} for q in AUDIT_QUERIES}
-    rows: dict[str, dict[str, int]] = {q: {} for q in AUDIT_QUERIES}
-    for label, sf_dir in TIERS:
+    os.environ["EPS_SKIP_WITNESS"] = "1"
+    spark = get_spark(app_name="shuffle_audit")
+    write_bytes: dict[str, dict[str, float]] = {q: {} for q in AUDIT_QUERIES}
+    for label, sf_dir in SF_DIRS:
         spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
         for q in AUDIT_QUERIES:
-            fn, _ = REGISTRY[q]
-            w0, r0 = total_shuffle_bytes(ui)
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            w1, r1 = total_shuffle_bytes(ui)
-            out[q][label] = {"write_bytes": w1 - w0, "read_bytes": r1 - r0}
+            run = measure.timed(spark, REGISTRY[q][0], sf_dir)
+            write_bytes[q][label] = run["shuffle_write_mb"] * measure.counters.MB
 
     # growth factors that exceed the 10x row growth for a stated,
     # data-shape reason rather than a plan defect
@@ -131,9 +107,9 @@ def main() -> None:
             "with every character."
         ),
     }
-    report = {"tiers": dict(TIERS), "row_growth": 10, "queries": {}}
-    for q, t in out.items():
-        w01, w1 = t["sf0.1"]["write_bytes"], t["sf1"]["write_bytes"]
+    report = {"tiers": dict(SF_DIRS), "row_growth": 10, "queries": {}}
+    for q, t in write_bytes.items():
+        w01, w1 = t["sf0.1"], t["sf1"]
         report["queries"][q] = {
             "sf0.1_write_mb": round(w01 / 1e6, 3),
             "sf1_write_mb": round(w1 / 1e6, 3),

@@ -7,9 +7,8 @@ evidenced the way the eval family's five decades are: build wall may
 grow with the corpus (one scan + one keyed shuffle), estimate wall must
 stay flat.
 
-Each tier runs in a fresh JVM (same rationale as scale_trend.py). The
-store is materialized (eager localCheckpoint) between the phases so the
-estimate timing cannot silently re-run the build.
+The store is materialized (eager localCheckpoint) between the phases
+so the estimate timing cannot silently re-run the build.
 
 Usage: python scripts/sketch_store_trend.py [--tiers sf10,sf100] > SCALE_TREND_R9_SKETCH.json
 """
@@ -17,24 +16,11 @@ Usage: python scripts/sketch_store_trend.py [--tiers sf10,sf100] > SCALE_TREND_R
 from __future__ import annotations
 
 import json
-import os
-import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
-
-TIERS = [
-    ("sf0.01", os.path.join(REPO, ".scaledata", "sf0.01"), 1),
-    ("sf0.1", os.path.join(REPO, ".scaledata", "sf0.1"), 10),
-    ("sf1", os.path.join(REPO, ".scaledata", "sf1"), 100),
-    ("sf10", os.path.join(REPO, ".scaledata", "sf10"), 1000),
-    ("sf100", os.path.join(REPO, ".scaledata", "sf100"), 10000),
-]
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
+import measure
 
 
 def run_tier(sf_dir: str) -> dict:
@@ -46,11 +32,9 @@ def run_tier(sf_dir: str) -> dict:
         quantile_anchor_rollup,
         quantile_anchor_sketches,
     )
-    from epic_pandas_spark.session import get_spark, load_table
+    from epic_pandas_spark.session import load_table
 
-    spark = get_spark(app_name="sketch_store_trend")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()  # warm footers
+    spark = measure.session("sketch_store_trend", sf_dir, "documents")
 
     def h60(c):
         return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
@@ -88,41 +72,15 @@ def run_tier(sf_dir: str) -> dict:
     return out
 
 
-def _last_json(stdout: str) -> dict:
-    """Parse the child's result line: the JVM can print warnings to stdout
-    (e.g. incubator-module notices under a larger heap), so take the LAST
-    line that parses as a JSON object."""
-    for line in reversed(stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            try:
-                return json.loads(line)
-            except ValueError:
-                continue
-    raise ValueError(f"no JSON line in child stdout: {stdout[-500:]!r}")
-
-
 def main() -> None:
     evidence_lock.acquire("sketch_store_trend")
     if len(sys.argv) > 2 and sys.argv[1] == "--tier":
         print(json.dumps(run_tier(sys.argv[2])))
         return
-    only = None
+    labels = ["sf0.01", "sf0.1", "sf1", "sf10", "sf100"]
     if len(sys.argv) > 2 and sys.argv[1] == "--tiers":
-        only = set(sys.argv[2].split(","))
-    tiers: dict[str, dict] = {}
-    for label, sf_dir, mult in TIERS:
-        if only is not None and label not in only:
-            continue
-        if not os.path.isdir(sf_dir):
-            print(f"skip {label}: {sf_dir} missing", file=sys.stderr)
-            continue
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--tier", sf_dir],
-            capture_output=True, text=True, check=True,
-        )
-        tiers[label] = {"rows_multiplier": mult, **_last_json(proc.stdout)}
-        print(f"{label}: {tiers[label]}", file=sys.stderr)
+        labels = [l for l in labels if l in sys.argv[2].split(",")]
+    tiers = measure.over_tiers(__file__, labels)
     report = {
         "queries": ["kmv_setops_matrix", "quantile_anchor_rollup"],
         "tiers": tiers,

@@ -5,9 +5,9 @@ same duplicated-corpus construction as the registry query (every 7th doc
 re-appended). The round-8 sf100 row was null (per-char gram sort spilled
 past the node's scratch); this measures the tier that failure blocked.
 
-Each tier runs in a fresh JVM. Output aggregates (docs, removed chars,
-kept chars) are recorded so every tier's result is also a cross-tier
-sanity check against the DuckDB-oracled semantics.
+Output aggregates (docs, removed chars, kept chars) are recorded so
+every tier's result is also a cross-tier sanity check against the
+DuckDB-oracled semantics.
 
 Usage: python scripts/spans_trend.py [--tiers sf1,sf10] > SCALE_TREND_R9_SPANS.json
 """
@@ -16,32 +16,31 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
+import measure
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
+def _summary(out) -> dict:
+    """Output aggregates of a remove_repeated_spans frame (runs it)."""
+    from pyspark.sql import functions as F
 
-TIERS = [
-    ("sf0.1", os.path.join(REPO, ".scaledata", "sf0.1"), 1),
-    ("sf1", os.path.join(REPO, ".scaledata", "sf1"), 10),
-    ("sf10", os.path.join(REPO, ".scaledata", "sf10"), 100),
-    ("sf100", os.path.join(REPO, ".scaledata", "sf100"), 1000),
-]
+    row = out.agg(
+        F.sum("n_removed_chars").alias("rm"),
+        F.sum(F.length("cleaned")).alias("kept"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    return {"n_out": row["n"], "sum_removed_chars": row["rm"], "sum_kept_chars": row["kept"]}
 
 
 def run_tier(sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from epic_pandas_spark.extensions.dedup import remove_repeated_spans
-    from epic_pandas_spark.session import get_spark
 
-    spark = get_spark(app_name="spans_trend")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("spans_trend", sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     dups = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
         "doc_id", F.col("doc_id") + F.lit(1000000)
@@ -49,19 +48,8 @@ def run_tier(sf_dir: str) -> dict:
     u = docs.unionByName(dups)
     n_in = u.count()  # warms footers too
     t0 = time.monotonic()
-    out = remove_repeated_spans(u, "text", "doc_id", min_len=50, keep_first=True)
-    row = out.agg(
-        F.sum("n_removed_chars").alias("rm"),
-        F.sum(F.length("cleaned")).alias("kept"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return {
-        "n_input_docs": n_in,
-        "n_out": row["n"],
-        "sum_removed_chars": row["rm"],
-        "sum_kept_chars": row["kept"],
-        "wall_sec": round(time.monotonic() - t0, 2),
-    }
+    res = _summary(remove_repeated_spans(u, "text", "doc_id", min_len=50, keep_first=True))
+    return {"n_input_docs": n_in, **res, "wall_sec": round(time.monotonic() - t0, 2)}
 
 
 BOILER = (
@@ -82,10 +70,8 @@ def run_skew_tier(sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from epic_pandas_spark.extensions.dedup import remove_repeated_spans
-    from epic_pandas_spark.session import get_spark
 
-    spark = get_spark(app_name="spans_trend_skew")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("spans_trend_skew", sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     tainted = docs.withColumn(
         "text",
@@ -113,18 +99,8 @@ def run_skew_tier(sf_dir: str) -> dict:
     )
     for label, kw in variants:
         t0 = time.monotonic()
-        out = remove_repeated_spans(tainted, "text", "doc_id", min_len=50, **kw)
-        row = out.agg(
-            F.sum("n_removed_chars").alias("rm"),
-            F.sum(F.length("cleaned")).alias("kept"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        res[label] = {
-            "wall_sec": round(time.monotonic() - t0, 2),
-            "n_out": row["n"],
-            "sum_removed_chars": row["rm"],
-            "sum_kept_chars": row["kept"],
-        }
+        summary = _summary(remove_repeated_spans(tainted, "text", "doc_id", min_len=50, **kw))
+        res[label] = {"wall_sec": round(time.monotonic() - t0, 2), **summary}
     for label in ("hot_split_default", "hot_split_forced"):
         assert (
             res[label]["sum_removed_chars"] == res["window_only"]["sum_removed_chars"]
@@ -219,91 +195,30 @@ def run_skew_tier(sf_dir: str) -> dict:
     return {"n_input_docs": n_in, "hot_doc_frac": 0.4, **res}
 
 
-def _host_baseline() -> dict:
-    """Per-tier host micro-baseline (same workloads as bench_map):
-    this VM's speed wanders up to 2x within a session under co-tenant
-    load (measured round 10: python loop 0.54 -> 0.70 -> 0.93s across
-    one day), so every tier's wall time is recorded next to the host
-    speed at the moment it ran."""
-    import time as _t
-
-    import numpy as np
-
-    a = np.random.default_rng(7).standard_normal((2048, 2048))
-    t0 = _t.perf_counter()
-    for _ in range(3):
-        a = a @ a * 1e-3
-    gemm = round(_t.perf_counter() - t0, 4)
-    t0 = _t.perf_counter()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i ^ (i >> 3)
-    pyloop = round(_t.perf_counter() - t0, 4)
-    return {"numpy_gemm_2048_sec": gemm, "python_loop_5m_sec": pyloop}
-
-
-def _last_json(stdout: str) -> dict:
-    """Parse the child's result line: the JVM can print warnings to stdout
-    (e.g. incubator-module notices under a larger heap), so take the LAST
-    line that parses as a JSON object."""
-    for line in reversed(stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            try:
-                return json.loads(line)
-            except ValueError:
-                continue
-    raise ValueError(f"no JSON line in child stdout: {stdout[-500:]!r}")
-
-
 def main() -> None:
     evidence_lock.acquire("spans_trend")
-    if len(sys.argv) > 2 and sys.argv[1] == "--tier":
-        print(json.dumps(run_tier(sys.argv[2])))
-        return
-    if len(sys.argv) > 2 and sys.argv[1] == "--skew-tier":
-        print(json.dumps(run_skew_tier(sys.argv[2])))
+    if sys.argv[1:2] == ["--tier"]:
+        run = run_skew_tier if "--skew" in sys.argv[3:] else run_tier
+        # host speed at the moment the tier ran: this VM's speed wanders up
+        # to 2x within a session under co-tenant load (round 10: python
+        # loop 0.54 -> 0.70 -> 0.93 s across one day)
+        print(json.dumps({**run(sys.argv[2]), "host_baseline": measure.host_baseline()}))
         return
     skew = sys.argv[1:2] == ["--skew"]
-    only = None
+    labels = ["sf0.1", "sf1", "sf10", "sf100"]
     if len(sys.argv) > 2 and sys.argv[1] in ("--tiers", "--skew"):
-        only = set(sys.argv[2].split(","))
-    tiers: dict[str, dict] = {}
-    for label, sf_dir, mult in TIERS:
-        if only is not None and label not in only:
-            continue
-        if not os.path.isdir(sf_dir):
-            print(f"skip {label}: {sf_dir} missing", file=sys.stderr)
-            continue
-        env = dict(os.environ)
-        if label == "sf100":
-            # size the heap to the tier (session.py documents the knob);
-            # 16g default leaves ~300MB execution memory per task under
-            # 32-way concurrency, which this tier's window sort outgrows
-            env.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-        proc = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--skew-tier" if skew else "--tier",
-                sf_dir,
-            ],
-            capture_output=True, text=True, check=True, env=env,
-        )
-        tiers[label] = {
-            "rows_multiplier": mult,
-            **_last_json(proc.stdout),
-            "host_baseline": _host_baseline(),
-        }
-        print(f"{label}: {tiers[label]}", file=sys.stderr)
-    base_label = next(iter(tiers), None)
-    if base_label and not skew:
-        base = tiers[base_label]
-        for label, t in tiers.items():
-            if label != base_label:
-                t[f"wall_ratio_vs_{base_label}"] = round(
-                    t["wall_sec"] / base["wall_sec"], 2
-                )
+        labels = [l for l in labels if l in sys.argv[2].split(",")]
+
+    # size the heap to the tier (session.py documents the knob): the 16g
+    # default leaves ~300MB execution memory per task under 32-way
+    # concurrency, which sf100's window sort outgrows
+    big_heap = {"SPARK_GRAFT_DRIVER_MEM": "48g", **os.environ}
+    tiers = measure.over_tiers(
+        __file__, labels, lambda label: big_heap if label == "sf100" else None,
+        ("--skew",) if skew else (), base="sf0.1",
+    )
+    if not skew:
+        measure.ratios(tiers, wall="wall_sec")
     report = {
         "query": "remove_repeated_spans" + ("_hot_gram_skew" if skew else ""),
         "tiers": tiers,

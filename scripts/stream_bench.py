@@ -20,16 +20,14 @@ import json
 import os
 import shutil
 import sys
-
-import evidence_lock  # noqa: E402  (scripts/ is sys.path[0] when run as a file)
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
 
-from epic_pandas_spark.session import get_spark, load_table
+import evidence_lock  # (scripts/ is sys.path[0] when run as a file)
+import measure
+from epic_pandas_spark.session import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_SHARDS = 4
@@ -70,8 +68,7 @@ def _to_memory(stream_df, name: str, mode: str) -> float:
 
 def main() -> None:
     evidence_lock.acquire("stream_bench")
-    spark = get_spark(app_name="epic_pandas_spark_stream_bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("epic_pandas_spark_stream_bench", SF_DIR)
     tmp = tempfile.mkdtemp(prefix="stream_bench_")
     out: dict[str, dict] = {}
     try:

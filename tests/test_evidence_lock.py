@@ -73,6 +73,7 @@ def test_every_timing_script_acquires_the_lock():
     for name in (
         "refresh_evidence", "bench_map", "scale_trend",
         "lsh_trend", "edit_trend", "stream_bench", "sketch_store_trend", "spans_trend",
+        "passages_trend", "measure",
     ):
         src = open(os.path.join(REPO, "scripts", f"{name}.py")).read()
         assert "evidence_lock.acquire(" in src, f"{name}.py missing the solo lock"
