@@ -63,14 +63,6 @@ def _norm_words(text: Column) -> Column:
     return F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " ")
 
 
-# train_quality_classifier: largest model that rides the plan as ONE
-# array literal (8 B/bucket -> 512 KB of plan at the bound) instead of a
-# per-iteration broadcast relation + join. Above it the broadcast-join
-# form is kept — a multi-MB literal re-serialized into every task beats
-# nothing.
-_W_LITERAL_MAX_BUCKETS = 1 << 16
-
-
 def ngram_hash_stream(
     df: DataFrame, text_col: str, id_col: str, n: int = 13, distinct: bool = True
 ) -> DataFrame:
@@ -671,68 +663,6 @@ def train_quality_classifier(
         n_docs = feat.filter(F.col("bucket") == -1).count()
         if n_docs == 0:
             raise ValueError("no labeled documents to train on")
-
-        # Weight-state transport per iteration (round 11, guide §2.4/§5):
-        # the model is <= n_buckets + 1 doubles — driver-scale state by
-        # construction. Small models (<= _W_LITERAL_MAX_BUCKETS) ride the
-        # plan as ONE array literal probed with F.get, and the gradient
-        # comes back as a bounded collect; the old shape built a broadcast
-        # relation + left join for z, a second grad-side join for the
-        # update, and an eager localCheckpoint job EVERY iteration — 3
-        # extra jobs/exchanges per step whose arithmetic this form
-        # replays bit-identically (same per-row products, same
-        # distributed sum order for z and the gradient, same IEEE-double
-        # update expression — the classifier-train oracle still
-        # hash-matches). Above the bound the broadcast-join form remains
-        # (a multi-MB array literal in every task's codegen would be
-        # worse than a broadcast).
-        use_literal = n_buckets <= _W_LITERAL_MAX_BUCKETS
-        if use_literal:
-            w_state: dict[int, float] = {}
-            for _ in range(iters):
-                arr = F.lit([w_state.get(b, 0.0) for b in range(n_buckets)])
-                w_of_bucket = F.when(
-                    F.col("bucket") == -1, F.lit(w_state.get(-1, 0.0))
-                ).otherwise(
-                    F.coalesce(F.get(arr, F.col("bucket").cast("int")), F.lit(0.0))
-                )
-                zdf = (
-                    feat.groupBy("__did", "__y")
-                    .agg(F.sum(F.col("__x") * w_of_bucket).alias("__z"))
-                )
-                resid = zdf.select(
-                    "__did",
-                    (
-                        (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__z"))) - F.col("__y"))
-                        / F.lit(float(n_docs))
-                    ).alias("__r"),
-                )
-                grad = (
-                    feat.join(resid, "__did")
-                    .groupBy("bucket")
-                    .agg(F.sum(F.col("__x") * F.col("__r")).alias("__g"))
-                )
-                # bounded collect: <= n_buckets + 1 rows, same job the old
-                # eager checkpoint ran — the update arithmetic is the same
-                # IEEE-double expression evaluated on the driver
-                w_state = {
-                    r["bucket"]: (
-                        w_state.get(r["bucket"], 0.0)
-                        - float(lr)
-                        * (
-                            r["__g"]
-                            + (0.0 if r["bucket"] == -1 else float(l2))
-                            * w_state.get(r["bucket"], 0.0)
-                        )
-                    )
-                    for r in grad.collect()
-                }
-            bias = w_state.get(-1, 0.0)
-            w_df = spark.createDataFrame(
-                sorted((int(b), float(w)) for b, w in w_state.items() if b != -1),
-                "bucket long, w double",
-            )
-            return w_df, float(bias), int(n_docs)
 
         w_df = spark.createDataFrame([], "bucket long, w double")
         for _ in range(iters):

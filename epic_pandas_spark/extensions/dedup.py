@@ -28,7 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from epic_pandas_spark.functions.text import fingerprint_expr, word_ngrams_expr
-from epic_pandas_spark.parallel import ensure_parallelism
+from epic_pandas_spark.parallel import collect_at_most, ensure_parallelism
 
 
 def _hadoop_path_exists(spark, path: str) -> bool:
@@ -709,10 +709,10 @@ def simhash_pairs(
     return hamming_pairs(sh, "sh", "id", max_hamming=max_hamming, n_bands=n_bands)
 
 
-# connected_components "auto": edge count at or below which the pair
-# graph is a bounded dim the driver labels directly (16 B/edge -> ~1.6 MB
-# collected at the bound) — the decade below minlabel's 2-tiny-jobs-per-
-# round regime, where job launch latency is the whole cost.
+# connected_components: edge count at or below which the pair graph is a
+# bounded dim the driver labels directly (16 B/edge -> ~1.6 MB collected
+# at the bound) — the regime where min-label's 2-tiny-jobs-per-round
+# launch latency is the whole cost.
 _CC_DRIVER_MAX_EDGES = 100_000
 
 
@@ -722,102 +722,67 @@ def connected_components(
     id_b: str = "id_b",
     max_iterations: int = 20,
     on_nonconverged: str = "raise",
-    algorithm: str = "auto",
-    star_threshold: int = 10_000_000,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → (id, cluster)
     with cluster = min id reachable. The dedup endgame: keep one doc per
     component.
 
-    Two algorithms, identical output:
+    The tier is picked from the data: the pair list is checkpointed once
+    and one bounded collect probes it.
 
-    - ``"minlabel"`` (default): min-label propagation with pointer
-      doubling — each round (1) takes the min label across edges and
-      (2) replaces each node's label with its label's label, the shortcut
-      step that makes convergence O(log diameter) rather than
-      O(diameter), so a 20-round cap covers path graphs of ~2^20 nodes.
-      Keeps the full edge list live every round.
-    - ``"star"``: alternating large-star/small-star edge rewriting
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SOCC'14) — each round rewrites the edge set itself toward a star
-      per component, so the per-round shuffle SHRINKS as components
-      collapse; converges in O(log n) rounds unconditionally (the
-      paper's Theorem 11 bound is O(log² n) worst-case, O(log n) in
-      practice and on bounded-degeneracy graphs). The better choice when
-      the pair graph is huge but its components are small — the standard
-      near-dup shape.
+    - At most ``_CC_DRIVER_MAX_EDGES`` edges: a driver union-find labels
+      the collected edges and returns one literal frame. Min-label's
+      per-round fixed cost — an eager checkpoint + a convergence-probe
+      job per round, 2-4 rounds even on a 256-edge graph — dwarfs the
+      actual work there (measured ~3 s of job round-trips on the
+      flagship sf0.1 pair graph; the union-find takes microseconds).
+    - Above it, or when an id is null or NaN (NaN never equals itself,
+      so a driver dict cannot key on it; Spark's joins treat NaN as
+      equal): min-label propagation with pointer doubling — each round
+      (1) takes the min label across edges and (2) replaces each node's
+      label with its label's label, the shortcut step that makes
+      convergence O(log diameter) rather than O(diameter), so a
+      20-round cap covers path graphs of ~2^20 nodes. Each round
+      shuffles on the node id; `localCheckpoint` truncates the lineage
+      so the plan doesn't grow exponentially across rounds — the
+      standard Spark iterative-algorithm pattern.
 
-    Each round shuffles on the node id; `localCheckpoint` truncates the
-    lineage so the plan doesn't grow exponentially across rounds — the
-    standard Spark iterative-algorithm pattern.
+    Both tiers give identical output (cluster = min reachable id,
+    order-independent).
 
-    ``"auto"`` (default) picks by MEASURED crossover, like AQE picks join
-    strategies: the pair list is checkpointed once (both algorithms
-    materialize it anyway) and its count probed — below
-    ``star_threshold`` edges (default 10M ≈ a few hundred MB shuffled per
-    round) minlabel wins, because on small graphs the per-round fixed cost
-    (2 tiny jobs) dominates and star runs more, smaller rounds; above it
-    the shrinking edge set is what keeps the rounds affordable, so star
-    wins. At sf0.1 the flagship pair graph is ~256 edges → minlabel
-    (measured 2.6 s vs star's 3.8 s); a 100 TB corpus' pair graph is
-    billions of edges → star.
-
-    If the loop still exits via `max_iterations` without reaching a
-    fixpoint, the result would be wrong (unfinished propagation), so it
-    raises by default; pass ``on_nonconverged="warn"`` to get the partial
-    labels with a RuntimeWarning instead."""
+    If the min-label loop still exits via `max_iterations` without
+    reaching a fixpoint, the result would be wrong (unfinished
+    propagation), so it raises by default; pass
+    ``on_nonconverged="warn"`` to get the partial labels with a
+    RuntimeWarning instead."""
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError("on_nonconverged must be 'raise' or 'warn'")
-    if algorithm not in ("auto", "minlabel", "star"):
-        raise ValueError("algorithm must be 'auto', 'minlabel', or 'star'")
-    if algorithm == "auto":
-        pairs = pairs.select(id_a, id_b).localCheckpoint(eager=True)
-        n_edges = pairs.count()
-        # Third tier (round 11, guide §1.2): below _CC_DRIVER_MAX_EDGES
-        # the edge list is a bounded dim (≤ ~1.6 MB collected), and
-        # minlabel's per-round fixed cost — an eager checkpoint + a
-        # convergence-probe job per round, 2-4 rounds even on a
-        # 256-edge graph — dwarfs the actual work (measured ~3 s of
-        # job round-trips on the flagship sf0.1 pair graph). A driver
-        # union-find labels the same graph in microseconds and returns
-        # one literal frame; output is identical (cluster = min
-        # reachable id, order-independent). The distributed tiers are
-        # untouched above the bound — this is the same probe-and-choose
-        # discipline that already picks minlabel vs star, extended one
-        # decade down. Null ids never occur in pair graphs (both
-        # distributed algorithms would drop them in joins); guarded
-        # anyway by falling through to minlabel.
-        if n_edges <= _CC_DRIVER_MAX_EDGES:
-            rows = pairs.collect()
-            if not any(r[0] is None or r[1] is None for r in rows):
-                parent: dict = {}
+    # lazy checkpoint: the gate's job materializes it, and min-label
+    # re-reads it instead of recomputing the pair plan
+    pairs = pairs.select(id_a, id_b).localCheckpoint(eager=False)
+    rows = collect_at_most(pairs, _CC_DRIVER_MAX_EDGES)
+    if rows is not None and not any(x is None or x != x for r in rows for x in r):
+        parent: dict = {}
 
-                def find(x):
-                    root = x
-                    while parent.get(root, root) != root:
-                        root = parent[root]
-                    while parent.get(x, x) != x:
-                        parent[x], x = root, parent[x]
-                    return root
+        def find(x):
+            root = x
+            while parent.get(root, root) != root:
+                root = parent[root]
+            while parent.get(x, x) != x:
+                parent[x], x = root, parent[x]
+            return root
 
-                for r in rows:
-                    ra, rb = find(r[0]), find(r[1])
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-                nodes = {r[0] for r in rows} | {r[1] for r in rows}
-                out = [(n, find(n)) for n in sorted(nodes)]
-                from pyspark.sql.types import StructField, StructType
+        for r in rows:
+            ra, rb = find(r[0]), find(r[1])
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        nodes = {r[0] for r in rows} | {r[1] for r in rows}
+        out = [(n, find(n)) for n in sorted(nodes)]
+        from pyspark.sql.types import StructField, StructType
 
-                dt = pairs.schema[id_a].dataType
-                schema = StructType(
-                    [StructField("id", dt), StructField("cluster", dt)]
-                )
-                return pairs.sparkSession.createDataFrame(out, schema)
-        algorithm = "star" if n_edges > star_threshold else "minlabel"
-    if algorithm == "star":
-        return _connected_components_star(
-            pairs, id_a, id_b, max_iterations, on_nonconverged
-        )
+        dt = pairs.schema[id_a].dataType
+        schema = StructType([StructField("id", dt), StructField("cluster", dt)])
+        return pairs.sparkSession.createDataFrame(out, schema)
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -879,113 +844,6 @@ def connected_components(
             raise RuntimeError(msg)
         warnings.warn(msg, RuntimeWarning)
     return labels
-
-
-def _connected_components_star(
-    pairs: DataFrame,
-    id_a: str,
-    id_b: str,
-    max_iterations: int,
-    on_nonconverged: str,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al. SOCC'14). Each round rewrites the edge set:
-
-    - large-star: every node u connects its strictly-larger neighbors to
-      m = min(Γ(u) ∪ {u});
-    - small-star: every node u connects its smaller-or-equal neighbors
-      (and itself) to m = min(Γ⁻(u) ∪ {u}).
-
-    Both operations preserve connectivity and monotonically drive every
-    component toward a single star rooted at its minimum id; the edge set
-    is a fixpoint exactly when it IS that union of stars, at which point
-    labels read off directly as (leaf → center) ∪ (center → center).
-
-    Scale shape: each round is two groupBy-min shuffles on the node id
-    over the CURRENT edge set — which shrinks as components collapse —
-    vs. minlabel's constant-size edge list every round. Fixpoint is
-    detected by an order-insensitive edge-set checksum (count +
-    sum(xxhash64)), one tiny agg per round."""
-    node_ids = pairs.select(F.col(id_a).alias("id")).unionByName(
-        pairs.select(F.col(id_b).alias("id"))
-    ).distinct().localCheckpoint(eager=False)
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def checksum(e: DataFrame) -> tuple:
-        # decimal(38,0) accumulator: a long SUM of 64-bit hashes overflows
-        # (ANSI mode throws) after a few dozen terms
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(F.least("a", "b"), F.greatest("a", "b")).cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    def large_star(e: DataFrame) -> DataFrame:
-        nbrs = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = nbrs.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            nbrs.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient each edge once, larger endpoint as center u
-        nbrs = e.select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("m"))
-        leaf_edges = (
-            nbrs.join(mins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        center_edges = mins.select(F.col("u").alias("a"), F.col("m").alias("b"))
-        return (
-            leaf_edges.unionByName(center_edges)
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    prev = checksum(edges)
-    converged = False
-    for _ in range(max_iterations):
-        edges = small_star(large_star(edges)).localCheckpoint(eager=True)
-        cur = checksum(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        msg = (
-            f"connected_components(algorithm='star') did not reach an edge-set "
-            f"fixpoint within {max_iterations} iterations; labels are "
-            "incomplete. Increase max_iterations."
-        )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning)
-    # fixpoint edge set is a union of min-rooted stars: (leaf a → center b)
-    leaf_labels = edges.select(
-        F.col("a").alias("id"), F.col("b").alias("cluster")
-    )
-    labeled_ids = leaf_labels.select("id")
-    center_labels = node_ids.join(labeled_ids, "id", "left_anti").select(
-        "id", F.col("id").alias("cluster")
-    )
-    return leaf_labels.unionByName(center_labels)
 
 
 # ---------------------------------------------------------------------------

@@ -16,6 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
+# pagerank: node count above which each round is eagerly checkpointed;
+# at or below it the n_iter rounds stay one lazy broadcast-join plan.
+_PAGERANK_LAZY_MAX_NODES = 2_000_000
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -23,7 +28,6 @@ def pagerank(
     damping: float = 0.85,
     n_iter: int = 10,
     directed: bool = False,
-    checkpoint_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Power-iteration PageRank → (id, rank), normalized so ranks sum to
     the node count (networkx convention × n). Fixed ``n_iter`` rounds —
@@ -33,8 +37,8 @@ def pagerank(
     edge list first. Self-loops are dropped; parallel edges collapse.
 
     Iteration strategy is picked by the MEASURED node count (the same
-    probe-and-choose discipline as connected_components' ``auto``): at or
-    below ``checkpoint_threshold`` nodes the whole iteration stays ONE
+    probe-and-choose discipline as connected_components' tiers): at or
+    below ``_PAGERANK_LAZY_MAX_NODES`` nodes the whole iteration stays ONE
     lazy plan — the rank table is broadcast-sized, AQE turns every
     per-round join into a broadcast join, and the n_iter-deep plan
     (depth is bounded by the fixed round count) runs as a single job
@@ -58,7 +62,7 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()
-    eager_rounds = n_nodes > checkpoint_threshold
+    eager_rounds = n_nodes > _PAGERANK_LAZY_MAX_NODES
     out_deg = (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))

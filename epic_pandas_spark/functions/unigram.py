@@ -281,6 +281,11 @@ def _floor_chars(counts: dict, vocab) -> dict:
     return out
 
 
+# unigram_train: distinct-word tables at or below this size run EM
+# driver-side; larger ones run the distributed E-step.
+_UNIGRAM_LOCAL_MAX_WORDS = 50_000
+
+
 def unigram_train(
     df: DataFrame,
     text_col: str,
@@ -289,28 +294,21 @@ def unigram_train(
     seed_multiplier: int = 4,
     em_rounds_per_prune: int = 2,
     prune_frac: float = 0.25,
-    mode: str = "auto",
-    local_vocab_threshold: int = 50_000,
     prune: str = "count",
 ) -> dict:
     """Learn a unigram-LM piece vocabulary; returns ``{piece: log_prob}``
     of size ≤ ``vocab_size`` (single characters always survive pruning).
 
-    ``mode`` mirrors :func:`bpe_train`: ``"auto"`` collects the
-    (word, count) table and runs the iteration kernel driver-side when
-    it fits under ``local_vocab_threshold`` (identical semantics — the
-    kernel is the same function the distributed E-step calls, and the
-    integer quantization makes both paths EXACTLY equal); ``"distributed"``
-    forces the Spark EM loop; ``"local"`` forces the driver kernel.
-
-    .. versionchanged:: round 9
-       ``local_vocab_threshold`` default dropped 2M -> 50k: the
-       threshold gates a WALL-time crossover, not a memory fit — the
-       driver kernel is single-core while the Spark E-step spreads the
-       same per-word lattices over every core, and both paths are
-       bit-identical, so past ~50k distinct words the distributed loop
-       wins despite per-round job overhead (sf10: ~500k distinct words
-       x ~12 E-step rounds were single-threaded before this).
+    The distinct-word table runs the iteration kernel driver-side when
+    it holds at most ``_UNIGRAM_LOCAL_MAX_WORDS`` rows, else the Spark EM
+    loop runs it (identical semantics — the kernel is the same function
+    the distributed E-step calls, and the integer quantization makes
+    both tiers EXACTLY equal). The bound gates a WALL-time crossover, not
+    a memory fit: the driver kernel is single-core while the Spark E-step
+    spreads the same per-word lattices over every core, so past ~50k
+    distinct words the distributed loop wins despite per-round job
+    overhead (sf10: ~500k distinct words x ~12 E-step rounds ran
+    single-threaded under a 2M bound).
 
     ``prune='count'`` (default) drops the lowest-expected-mass pieces —
     the standard practical approximation. ``prune='likelihood'`` applies
@@ -318,26 +316,25 @@ def unigram_train(
     a second lattice pass per candidate piece over the piece's OWN
     string, so the exact mode costs vocab-sized driver work per prune
     round and still never touches the corpus."""
+    from epic_pandas_spark.parallel import collect_at_most
+
     if vocab_size < 2:
         raise ValueError("vocab_size must be >= 2")
-    if mode not in ("auto", "local", "distributed"):
-        raise ValueError("mode must be auto, local, or distributed")
     if prune not in ("count", "likelihood"):
         raise ValueError("prune must be 'count' or 'likelihood'")
     if em_rounds_per_prune < 1:
         raise ValueError("em_rounds_per_prune must be >= 1")
 
-    freq_df = _word_freq_table(df, text_col).localCheckpoint(eager=True)
+    # lazy checkpoint: the seeding collects materialize it once; the gate
+    # and the distributed E-steps reuse it
+    freq_df = _word_freq_table(df, text_col).localCheckpoint(eager=False)
     seed = _seed_vocab(freq_df, max_piece_len, seed_size=vocab_size * seed_multiplier)
     # init: uniform over the seed
     logp = {p: -math.log(len(seed)) for p in seed}
 
-    distributed = mode == "distributed" or (
-        mode == "auto" and freq_df.count() > local_vocab_threshold
-    )
-    words_local = (
-        None if distributed else [(r["w"], r["cnt"]) for r in freq_df.collect()]
-    )
+    rows = collect_at_most(freq_df, _UNIGRAM_LOCAL_MAX_WORDS)
+    distributed = rows is None
+    words_local = None if distributed else [(r["w"], r["cnt"]) for r in rows]
 
     def e_step(cur_logp: dict) -> dict:
         if not distributed:

@@ -131,6 +131,11 @@ def _column_stats_per_column(df: DataFrame, cols, dtypes) -> DataFrame:
     )
 
 
+# quantiles(mode="auto"): column-pruned plan-size estimate at or under
+# which the exact percentile runs; above it, a sketch.
+_QUANTILES_EXACT_MAX_BYTES = 8 << 20
+
+
 def quantiles(
     df: DataFrame,
     value_col: str,
@@ -138,7 +143,6 @@ def quantiles(
     by: Sequence[str] | None = None,
     mode: str = "auto",
     accuracy: int = 10000,
-    exact_max_bytes: int = 8 << 20,
     names: Sequence[str] | None = None,
     bins: str = "global",
 ) -> DataFrame:
@@ -173,17 +177,16 @@ def quantiles(
     ``mode="auto"`` (default) routes on Catalyst's optimized-plan size
     estimate of just the scanned columns (parquet footer bytes scaled by
     column pruning — costs NO job): exact at or under
-    ``exact_max_bytes``; above it, the histogram sketch when ``by`` is
-    given (grouped GK measured 76x wall at 1000x rows vs 13x ungrouped —
-    the ObjectHashAggregate tax this path removes) and the GK sketch
-    ungrouped. The 8 MiB default flips exact → sketch between the
+    ``_QUANTILES_EXACT_MAX_BYTES``; above it, the histogram sketch when
+    ``by`` is given (grouped GK measured 76x wall at 1000x rows vs 13x
+    ungrouped — the ObjectHashAggregate tax this path removes) and the GK
+    sketch ungrouped. The 8 MiB bound flips exact → sketch between the
     oracle/bench scale factors and the 100x tier (measured column-pruned
     estimates: 1.5-3.4 MB at sf0.1, 16-35 MB at sf1), so small data
     keeps bit-exact oracle parity while the growth trend rides the
-    sketch; raise it when bit-exact quantiles matter on bigger scans.
-    Same data-sized auto discipline as
-    ``connected_components(algorithm="auto")`` and ``derive_cms_width``
-    — callers keep one API.
+    sketch; pin ``mode="exact"`` when bit-exact quantiles matter on
+    bigger scans. Same data-sized tiering as ``connected_components``
+    and ``derive_cms_width`` — callers keep one API.
 
     CAVEAT: ``mode="auto"`` trusts Catalyst plan stats, which are only
     calibrated for scan-rooted inputs (parquet footer bytes × pruning).
@@ -202,7 +205,7 @@ def quantiles(
     group_cols = list(by) if by else []
     scanned = df.select(*group_cols, value_col)
     if mode == "auto":
-        if estimate_size_bytes(scanned, "plan") <= exact_max_bytes:
+        if estimate_size_bytes(scanned, "plan") <= _QUANTILES_EXACT_MAX_BYTES:
             mode = "exact"
         else:
             mode = "hist" if group_cols else "approx"

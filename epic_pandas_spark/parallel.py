@@ -101,3 +101,13 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def collect_at_most(df: DataFrame, n: int) -> list | None:
+    """The driver-tier gate: ``df``'s rows when there are at most ``n``,
+    else ``None`` — one bounded ``limit(n + 1)`` job in place of a
+    ``count()`` followed by a ``collect()``. Callers pass a (lazily)
+    ``localCheckpoint``-ed frame, so the job that probes the size also
+    materializes the input the distributed tier falls back to."""
+    rows = df.limit(n + 1).collect()
+    return rows if len(rows) <= n else None

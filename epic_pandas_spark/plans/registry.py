@@ -1055,11 +1055,11 @@ def q_near_dedup_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         docs, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
     )
-    # algorithm="auto": probes the (checkpointed) pair count and picks
-    # minlabel below 10M edges — per-round fixed cost dominates tiny
-    # graphs — and star's shrinking-shuffle rounds above it (the 100 TB
-    # path); see connected_components' docstring for the measured crossover
-    labels = connected_components(pairs, algorithm="auto")
+    # one bounded collect picks the tier: driver union-find up to 100k
+    # edges — min-label's per-round job latency dominates tiny graphs —
+    # and pointer-doubled min-label above it (the 100 TB path); see
+    # connected_components' docstring for the measured crossover
+    labels = connected_components(pairs)
     stats = labels.agg(
         F.count(F.lit(1)).alias("n_dup_members"),
         F.count_distinct("cluster").alias("n_clusters"),
@@ -5390,7 +5390,7 @@ def q_ccnet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         k2, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
     )
-    clusters = connected_components(pairs, algorithm="auto").select(
+    clusters = connected_components(pairs).select(
         F.col("id").alias("doc_id"), "cluster"
     )
     k3 = keep_best_per_cluster(

@@ -73,7 +73,7 @@ def get_spark(
         # Spark's vectorized reader rejects; read as long and convert in
         # load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,24 +22,34 @@ def test_merge_word_greedy_nonoverlapping():
     assert _merge_word(list("xy"), "a", "b") == ["x", "y"]
 
 
-def test_bpe_train_matches_reference_on_toy_corpus(spark):
+def _force_distributed(monkeypatch):
+    """Drop the driver-tier bounds to 0 so training takes the Spark loop."""
+    from epic_pandas_spark.functions import bpe, unigram
+
+    monkeypatch.setattr(bpe, "_BPE_LOCAL_MAX_WORDS", 0)
+    monkeypatch.setattr(unigram, "_UNIGRAM_LOCAL_MAX_WORDS", 0)
+
+
+def test_bpe_train_matches_reference_on_toy_corpus(spark, monkeypatch):
     texts = [
         "low low low low low",
         "lower lower newest newest newest newest newest newest",
         "widest widest widest",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = bpe_train(df, "text", n_merges=10, mode="distributed")
     want = bpe_train_reference(texts, n_merges=10)
-    assert bpe_train(df, "text", n_merges=10) == want  # auto (local path) agrees
+    assert bpe_train(df, "text", n_merges=10) == want  # driver tier agrees
+    _force_distributed(monkeypatch)
+    got = bpe_train(df, "text", n_merges=10)
     assert got == want
     assert len(got) == 10 and got[0][0] and got[0][1]
 
 
-def test_bpe_train_matches_reference_on_documents(spark):
+def test_bpe_train_matches_reference_on_documents(spark, monkeypatch):
     docs = load_table(spark, SF_DIR, "documents").limit(120)
     texts = [r["text"] for r in docs.select("text").collect()]
-    got = bpe_train(docs, "text", n_merges=12, mode="distributed")
+    _force_distributed(monkeypatch)
+    got = bpe_train(docs, "text", n_merges=12)
     want = bpe_train_reference(texts, n_merges=12)
     assert got == want
 
@@ -67,8 +77,6 @@ def test_bpe_train_early_stop_and_validation(spark):
     assert bpe_train(df, "text", n_merges=5) == []
     with pytest.raises(ValueError):
         bpe_train(df, "text", n_merges=0)
-    with pytest.raises(ValueError):
-        bpe_train(df, "text", n_merges=1, mode="nope")
 
 
 # ---------------------------------------------------------------------------
@@ -105,10 +113,10 @@ def test_unigram_viterbi_hand_cases():
     assert _viterbi("", logp, 2) == []
 
 
-def test_unigram_train_parity_local_distributed_reference(spark):
+def test_unigram_train_parity_local_distributed_reference(spark, monkeypatch):
     """The quantized integer EM makes all three paths EXACTLY equal:
-    pure-Python reference == driver-kernel (auto/local) == Spark
-    distributed loop, including under a different partitioning."""
+    pure-Python reference == driver-kernel tier == Spark distributed
+    loop, including under a different partitioning."""
     texts = [
         "low low low low low",
         "lower lower newest newest newest newest newest newest",
@@ -121,13 +129,10 @@ def test_unigram_train_parity_local_distributed_reference(spark):
     )
 
     want = unigram_train_reference(texts, vocab_size=30, max_piece_len=6)
-    local = unigram_train(df, "text", vocab_size=30, max_piece_len=6, mode="local")
-    dist = unigram_train(
-        df, "text", vocab_size=30, max_piece_len=6, mode="distributed"
-    )
-    dist2 = unigram_train(
-        df.repartition(7), "text", vocab_size=30, max_piece_len=6, mode="distributed"
-    )
+    local = unigram_train(df, "text", vocab_size=30, max_piece_len=6)
+    _force_distributed(monkeypatch)
+    dist = unigram_train(df, "text", vocab_size=30, max_piece_len=6)
+    dist2 = unigram_train(df.repartition(7), "text", vocab_size=30, max_piece_len=6)
     assert local == want
     assert dist == want
     assert dist2 == want
@@ -167,8 +172,8 @@ def test_unigram_train_rejects_bad_args(spark):
     df = spark.createDataFrame([("a b",)], "text string")
     with pytest.raises(ValueError):
         unigram_train(df, "text", vocab_size=1)
-    with pytest.raises(ValueError):
-        unigram_train(df, "text", mode="bogus")
+    with pytest.raises(ValueError, match="prune"):
+        unigram_train(df, "text", prune="bogus")
 
 
 def test_unigram_chars_always_survive_em():
@@ -199,7 +204,7 @@ def test_unigram_train_keeps_all_corpus_chars(spark):
     texts = ["ababab ababab abab", "ababab qq", "abababab z"] * 4
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     kw = dict(vocab_size=6, max_piece_len=4, em_rounds_per_prune=3)
-    got = unigram_train(df, "text", mode="local", **kw)
+    got = unigram_train(df, "text", **kw)
     ref = unigram_train_reference(texts, **kw)
     assert set(got) == set(ref)
     for p in got:
@@ -208,7 +213,7 @@ def test_unigram_train_keeps_all_corpus_chars(spark):
     assert corpus_chars <= set(got)
 
 
-def test_unigram_likelihood_prune_parity_and_semantics(spark):
+def test_unigram_likelihood_prune_parity_and_semantics(spark, monkeypatch):
     """prune='likelihood' (SentencePiece's exact loss): the distributed
     trainer stays in EXACT parity with the pure-Python reference, the
     trained vocab hits the size budget with all chars kept, and the loss
@@ -227,7 +232,7 @@ def test_unigram_likelihood_prune_parity_and_semantics(spark):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     kw = dict(vocab_size=8, max_piece_len=4, em_rounds_per_prune=2,
               prune="likelihood")
-    got = unigram_train(df, "text", mode="local", **kw)
+    got = unigram_train(df, "text", **kw)
     ref = unigram_train_reference(texts, **kw)
     assert set(got) == set(ref)
     for p in got:
@@ -236,7 +241,8 @@ def test_unigram_likelihood_prune_parity_and_semantics(spark):
     corpus_chars = {c for t in texts for c in t.replace(" ", "")}
     assert corpus_chars <= set(got)
     # distributed twin: identical to local (integer-quantized EM)
-    dist = unigram_train(df, "text", mode="distributed", **kw)
+    _force_distributed(monkeypatch)
+    dist = unigram_train(df, "text", **kw)
     assert set(dist) == set(got)
     for p in got:
         assert abs(dist[p] - got[p]) < 1e-12, p

@@ -880,32 +880,6 @@ def test_train_quality_classifier_parity_vs_numpy(spark):
         assert got[k] == pytest.approx(want[k], abs=1e-9)
 
 
-def test_train_quality_classifier_literal_vs_broadcast_paths(spark, monkeypatch):
-    """Round 11 split the weight transport: small models ride the plan
-    as one array literal (no per-iteration broadcast join/checkpoint),
-    big models keep the broadcast-join loop. Both paths must produce
-    IDENTICAL weights — forced here by flipping the size gate on the
-    same corpus and bucket count."""
-    from epic_pandas_spark.extensions import curation
-    from epic_pandas_spark.extensions.curation import train_quality_classifier
-
-    df = _train_docs(spark)
-    w_lit, b_lit, n_lit = train_quality_classifier(
-        df, "text", "label", "doc_id", n_buckets=64, iters=4, lr=5.0, l2=0.01
-    )
-    lit = {r["bucket"]: r["w"] for r in w_lit.collect()}
-    monkeypatch.setattr(curation, "_W_LITERAL_MAX_BUCKETS", 0)  # force broadcast path
-    w_bc, b_bc, n_bc = train_quality_classifier(
-        df, "text", "label", "doc_id", n_buckets=64, iters=4, lr=5.0, l2=0.01
-    )
-    bc = {r["bucket"]: r["w"] for r in w_bc.collect()}
-    assert n_lit == n_bc
-    assert b_lit == pytest.approx(b_bc, abs=1e-12)
-    assert set(lit) == set(bc)
-    for k in bc:
-        assert lit[k] == pytest.approx(bc[k], abs=1e-12)
-
-
 def test_train_quality_classifier_separates_and_scores(spark):
     """End-to-end composition: trained weights fed to
     hashed_feature_scores separate the planted classes."""

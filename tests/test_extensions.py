@@ -136,140 +136,89 @@ def test_connected_components_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_long_path_pointer_doubling(spark):
+def test_connected_components_long_path_pointer_doubling(spark, monkeypatch):
     """A 40-node path has diameter 39 — plain min-propagation needs ~39
     rounds, so finishing inside max_iterations=8 proves the pointer-doubling
     shortcut gives O(log diameter) convergence."""
+    from epic_pandas_spark.extensions import dedup
     from epic_pandas_spark.extensions.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)  # force min-label
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
     got = {
         r["id"]: r["cluster"]
-        for r in connected_components(
-            pairs, max_iterations=8, algorithm="minlabel"
-        ).collect()
+        for r in connected_components(pairs, max_iterations=8).collect()
     }
     assert got == {i: 0 for i in range(41)}
 
 
-def test_connected_components_nonconverged_raises(spark):
+def test_connected_components_nonconverged_raises(spark, monkeypatch):
     """Exiting via max_iterations with labels still moving must not return
     silently-wrong clusters (ADVICE r1): default raises, warn-mode warns."""
+    from epic_pandas_spark.extensions import dedup
     from epic_pandas_spark.extensions.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)  # force min-label
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iterations=1, algorithm="minlabel")
+        connected_components(pairs, max_iterations=1)
     with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(
-            pairs, max_iterations=1, on_nonconverged="warn", algorithm="minlabel"
-        )
+        connected_components(pairs, max_iterations=1, on_nonconverged="warn")
 
 
-def test_connected_components_driver_tier_matches_distributed(spark):
-    """Round 11 added the bounded-dim driver union-find tier under
-    "auto": on a random multi-component graph its labels must equal both
-    distributed algorithms' exactly (cluster = min reachable id)."""
+def _cc_labels(pairs) -> dict:
+    from epic_pandas_spark.extensions.dedup import connected_components
+
+    return {r["id"]: r["cluster"] for r in connected_components(pairs).collect()}
+
+
+def test_connected_components_driver_tier_matches_distributed(spark, monkeypatch):
+    """The bounded-dim driver union-find tier: on a random multi-component
+    graph its labels must equal min-label's exactly (cluster = min
+    reachable id), min-label forced by dropping the edge bound to 0."""
     import random
 
-    from epic_pandas_spark.extensions.dedup import connected_components
+    from epic_pandas_spark.extensions import dedup
 
     rng = random.Random(11)
     edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    auto = {r["id"]: r["cluster"] for r in connected_components(pairs).collect()}
-    ml = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="minlabel").collect()
-    }
-    st = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    assert auto == ml == st
+    driver = _cc_labels(pairs)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    assert driver == _cc_labels(pairs)
 
 
-def test_connected_components_star_path_graph_round_bound(spark):
-    """Large-star/small-star on a 2^12-node path graph (diameter 4095)
-    must reach the single-star fixpoint within the documented O(log n)
-    round budget — max_iterations=16 > log2(4096)=12 — and label every
-    node with the component min (VERDICT r2 item 5)."""
-    from epic_pandas_spark.extensions.dedup import connected_components
+def test_connected_components_string_and_nan_ids_match_minlabel(spark, monkeypatch):
+    """Non-integral ids: string ids label through the driver tier, and a
+    NaN id (which never equals itself, so a driver dict cannot find it)
+    must fall through to min-label instead of raising KeyError. Both
+    must equal min-label's labels, forced by dropping the edge bound."""
+    from epic_pandas_spark.extensions import dedup
 
-    n = 1 << 12
-    pairs = spark.range(n - 1).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    strs = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("x", "y"), ("é", "z")], "id_a string, id_b string"
     )
-    labels = connected_components(
-        pairs, max_iterations=16, algorithm="star"
+    nan = float("nan")
+    dbls = spark.createDataFrame(
+        [(2.5, 1.5), (nan, 2.5), (7.0, 8.0), (9.0, nan)], "id_a double, id_b double"
     )
-    agg = labels.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("id").alias("n_ids"),
-        F.sum((F.col("cluster") != 0).cast("long")).alias("bad"),
-    ).first()
-    assert agg["n"] == n and agg["n_ids"] == n and agg["bad"] == 0
 
+    def canon(labels: dict) -> dict:
+        # NaN keys/values compare by identity in a dict: key them by repr
+        return {repr(k): repr(v) for k, v in labels.items()}
 
-def test_connected_components_star_matches_minlabel(spark):
-    """Both algorithms must produce identical labels on an irregular
-    multi-component graph (stars, chains, a cycle, isolated pair)."""
-    from epic_pandas_spark.extensions.dedup import connected_components
-
-    edges = (
-        [(1, 2), (2, 3), (3, 4)]                 # chain
-        + [(10, 11), (10, 12), (10, 13)]         # star centered high
-        + [(20, 21), (21, 22), (22, 20)]         # cycle
-        + [(30, 31)]                             # pair
-        + [(40, 41), (41, 42), (42, 43), (43, 40), (43, 44)]  # cycle + tail
-    )
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {r["id"]: r["cluster"] for r in connected_components(pairs).collect()}
-    b = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    assert a == b
-    assert b[44] == 40 and b[13] == 10 and b[4] == 1
-
-
-def test_connected_components_auto_crossover(spark):
-    """auto mode must dispatch by pair count: below star_threshold it runs
-    minlabel, above it star — identical labels either way (forced by
-    setting the threshold to 0)."""
-    from epic_pandas_spark.extensions.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    small = {
-        r["id"]: r["cluster"]
-        for r in connected_components(pairs, algorithm="auto").collect()
-    }
-    forced_star = {
-        r["id"]: r["cluster"]
-        for r in connected_components(
-            pairs, algorithm="auto", star_threshold=0
-        ).collect()
-    }
-    assert small == forced_star == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(pairs, algorithm="bogus")
-
-
-def test_connected_components_star_nonconverged_raises(spark):
-    from epic_pandas_spark.extensions.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(pairs, max_iterations=1, algorithm="star")
+    got_str, got_dbl = _cc_labels(strs), canon(_cc_labels(dbls))
+    assert got_str == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z", "é": "z"}
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    assert got_str == _cc_labels(strs)
+    assert got_dbl == canon(_cc_labels(dbls))
+    # Spark orders NaN above every double, so 1.5 labels NaN's component
+    assert got_dbl == canon({1.5: 1.5, 2.5: 1.5, nan: 1.5, 9.0: 1.5, 7.0: 7.0, 8.0: 7.0})
 
 
 def test_ivf_knn_recall_vs_bruteforce(spark):

@@ -69,27 +69,32 @@ def test_pagerank_validation_and_degree_stats(spark):
     assert deg == {1: 1, 2: 2, 3: 1}  # self-loop dropped
 
 
-def test_pagerank_eager_and_lazy_rounds_identical(spark):
-    """checkpoint_threshold=0 forces the large-graph path (eager
-    per-round localCheckpoints); the default keeps small graphs in one
+def test_pagerank_eager_and_lazy_rounds_identical(spark, monkeypatch):
+    """A node bound of 0 forces the large-graph path (eager per-round
+    localCheckpoints); the default keeps small graphs in one
     lazy plan. Both must produce the same ranks — the strategy is a
     physical choice, never a semantic one. (Tolerance is ULP-scale: the
     eager path's different partitioning reorders the dangling-mass float
     sum.)"""
     import random
 
+    from epic_pandas_spark.extensions import graph
+
     rng = random.Random(3)
     edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(120)})
     df = spark.createDataFrame(edges, "src long, dst long")
-    for directed in (False, True):
-        lazy = {r["id"]: r["rank"]
+
+    def ranks(directed: bool) -> dict:
+        return {r["id"]: r["rank"]
                 for r in pagerank(df, n_iter=6, directed=directed).collect()}
-        eager = {r["id"]: r["rank"]
-                 for r in pagerank(df, n_iter=6, directed=directed,
-                                   checkpoint_threshold=0).collect()}
-        assert set(lazy) == set(eager), directed
-        for k in lazy:
-            assert abs(lazy[k] - eager[k]) < 1e-12, (directed, k)
+
+    lazy = {directed: ranks(directed) for directed in (False, True)}
+    monkeypatch.setattr(graph, "_PAGERANK_LAZY_MAX_NODES", 0)
+    for directed in (False, True):
+        eager = ranks(directed)
+        assert set(lazy[directed]) == set(eager), directed
+        for k in eager:
+            assert abs(lazy[directed][k] - eager[k]) < 1e-12, (directed, k)
 
 
 def test_triangle_counts_closed_forms(spark):

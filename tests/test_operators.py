@@ -15,7 +15,7 @@ from epic_pandas_spark.operators import (
 )
 from epic_pandas_spark.operators.sampling import allocate_counts
 from epic_pandas_spark.operators.sparse import stack, coo_is_square, coo_transpose, coo_todense
-from epic_pandas_spark.parallel import papply, grouped_papply
+from epic_pandas_spark.parallel import collect_at_most, papply, grouped_papply
 from epic_pandas_spark.sources.ingest import df_from_iterable, series_from_iterable
 
 
@@ -211,6 +211,15 @@ def test_grouped_papply(spark):
     out = grouped_papply(df, ["g"], demean, "g int, v double")
     sums = out.groupBy("g").agg(F.round(F.sum("v"), 9).alias("s")).collect()
     assert all(r["s"] == 0.0 for r in sums)
+
+
+def test_collect_at_most_bounds_the_collect(spark):
+    """The driver-tier gate: at most n rows come back as a list, n + 1
+    rows as None, and an empty frame as []."""
+    df = spark.range(5).localCheckpoint(eager=False)
+    assert sorted(r["id"] for r in collect_at_most(df, 5)) == [0, 1, 2, 3, 4]
+    assert collect_at_most(df, 4) is None
+    assert collect_at_most(df.filter("id < 0"), 3) == []
 
 
 # --- COO sparse ------------------------------------------------------------
@@ -534,13 +543,14 @@ def test_column_stats_counts_nulls(spark):
     assert row["top_value"] == "a" and row["top_count"] == 2 and row["second_value"] == "b"
 
 
-def test_quantiles_auto_routing_and_parity(spark):
+def test_quantiles_auto_routing_and_parity(spark, monkeypatch):
     """operators.stats.quantiles: mode='exact' equals pandas/DuckDB
     linear interpolation; auto routes exact under the plan-stat
     crossover and sketch above it; the sketch twin stays within the GK
     rank bound; grouped routing carries the group column."""
     import numpy as np
 
+    from epic_pandas_spark.operators import stats
     from epic_pandas_spark.operators.stats import quantiles
     from epic_pandas_spark.session import load_table
     from tests.conftest import SF_DIR
@@ -556,9 +566,9 @@ def test_quantiles_auto_routing_and_parity(spark):
     auto = quantiles(li, "l_extendedprice", [0.25, 0.75], mode="auto").first()
     assert auto == exact
     # force the sketch route with a tiny crossover -> GK bound holds
-    approx = quantiles(
-        li, "l_extendedprice", [0.25, 0.75], mode="auto", exact_max_bytes=1
-    ).first()
+    with monkeypatch.context() as m:
+        m.setattr(stats, "_QUANTILES_EXACT_MAX_BYTES", 1)
+        approx = quantiles(li, "l_extendedprice", [0.25, 0.75], mode="auto").first()
     assert abs(approx["q0_25"] - exact["q0_25"]) / exact["q0_25"] < 0.01
 
     grouped = quantiles(
@@ -575,7 +585,7 @@ def test_quantiles_auto_routing_and_parity(spark):
         quantiles(li, "l_extendedprice", [0.5], names=["a", "b"])
 
 
-def test_grouped_hist_quantiles_bound_and_codegen(spark):
+def test_grouped_hist_quantiles_bound_and_codegen(spark, monkeypatch):
     """mode='hist': per-group estimates honor the sketch guarantee
     (within one bin width of the closed interval between the floor(t)
     and ceil(t) order statistics), degenerate all-equal columns return
@@ -587,6 +597,7 @@ def test_grouped_hist_quantiles_bound_and_codegen(spark):
 
     import numpy as np
 
+    from epic_pandas_spark.operators import stats
     from epic_pandas_spark.operators.stats import quantiles
     from epic_pandas_spark.session import load_table
     from tests.conftest import SF_DIR
@@ -621,9 +632,10 @@ def test_grouped_hist_quantiles_bound_and_codegen(spark):
     assert (row["a"], row["b"], row["c"]) == (7.5, 7.5, 7.5)
 
     # auto + by above the crossover routes to hist (not grouped GK)
+    monkeypatch.setattr(stats, "_QUANTILES_EXACT_MAX_BYTES", 1)
     routed = quantiles(
         li, "l_extendedprice", [0.5], by=["l_returnflag"], mode="auto",
-        exact_max_bytes=1, names=["med"],
+        names=["med"],
     )
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert "ObjectHashAggregate" not in plan
