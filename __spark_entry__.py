@@ -26,8 +26,8 @@ def entry(spark: SparkSession) -> DataFrame:
     resample — the engine's deepest composed plan (SURVEY.md §7.1 step 9;
     every stage broadcast- or bucket-shaped, document text never
     shuffles), cross-joined with a one-row summary of exact-substring
-    span removal (winnowing prefilter + heavy-hitter-split doc-freq, the
-    round-10 deep plan) so the driver smoke exercises both."""
+    span removal (winnowing prefilter + gram-keyed window doc-freq) so
+    the driver smoke exercises both."""
     fn, _sql = registry.REGISTRY["ccnet_curation"]
     ccnet = fn(spark, "/root/testdata/sf0.001")
 

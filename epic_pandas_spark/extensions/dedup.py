@@ -1317,28 +1317,43 @@ def winnowed_fingerprints(
 # above it the gram is site boilerplate whose pair output is itself
 # quadratic at corpus scale (one 50-char template string across 40% of
 # a 100-TB crawl would emit ~1e13 pairs from one key) — no physical
-# plan fixes an ANSWER that size, so the default drops such grams from
-# the signal. Same sizing discipline as remove_repeated_spans'
-# hot_gram_min_df: a constant derived from the single-task-fatal size,
-# not from a tunable someone must remember to set.
+# plan fixes an ANSWER that size, so such grams are dropped from the
+# signal: a constant derived from the single-task-fatal size, not a
+# tunable someone must remember to set.
 _AUTO_GRAM_FREQ = 10_000  # floor(sqrt(2 * 5e7)) — ≤ ~5e7 pairs per key
 
 
-def _drop_hot_grams(inv: DataFrame, key: str, max_freq: int) -> DataFrame:
-    """Drop inverted-index entries whose key's doc-frequency exceeds
-    ``max_freq`` via a broadcast ANTI join against the HOT key set. The
-    hot side is the boilerplate tail — bounded by |index| / max_freq
-    keys and in practice a handful — where the pre-round-11 shape
-    broadcast the COLD keys (nearly the whole gram vocabulary, a
-    driver-fatal broadcast on any real corpus). ``inv`` is distinct per
-    (id, key), so count(*) per key IS doc frequency."""
-    hot = (
-        inv.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_freq)
-        .select(key)
+def _shared_key_pairs(
+    df: DataFrame, inv: DataFrame, key: str, out_col: str
+) -> DataFrame:
+    """Doc pairs sharing at least one ``key`` of the inverted index
+    ``inv`` (id, key) — distinct per (id, key) — with the shared-key
+    count as ``out_col``. Body of both passage finders.
+
+    Hot-key guard: keys in more than :data:`_AUTO_GRAM_FREQ` docs drop
+    out via a broadcast ANTI join against the HOT key set (the
+    boilerplate tail, bounded by |index| / cap keys), so count(*) per
+    key IS doc frequency. A key's doc-frequency is bounded by the
+    corpus doc count, so when |docs| <= cap no key can exceed it and
+    one count-star over ``df`` skips the groupBy + anti join, which
+    would be a no-op."""
+    inv = inv.localCheckpoint(eager=False)  # both sides of the self-join
+    if df.count() > _AUTO_GRAM_FREQ:
+        hot = (
+            inv.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > _AUTO_GRAM_FREQ)
+            .select(key)
+        )
+        inv = inv.join(F.broadcast(hot), key, "left_anti")
+    a = inv.select(F.col("id").alias("id_a"), key)
+    b = inv.select(F.col("id").alias("id_b"), key)
+    return (
+        a.join(b, on=key)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias(out_col))
     )
-    return inv.join(F.broadcast(hot), key, "left_anti")
 
 
 def repeated_passage_pairs_winnowed(
@@ -1347,37 +1362,16 @@ def repeated_passage_pairs_winnowed(
     id_col: str,
     min_len: int = 50,
     window: int = 8,
-    max_fp_freq: int | None = _AUTO_GRAM_FREQ,
 ) -> DataFrame:
     """Scale path of :func:`repeated_passage_pairs`: candidate doc pairs
     sharing at least one winnowed fingerprint. Complete for pairs whose
     shared verbatim run is >= ``min_len + window - 1`` normalized chars
     (the winnowing guarantee); pairs sharing only shorter runs are
     best-effort. The inverted index carries ~2/(window+1) of the
-    full-gram entries, same join shape, same hot-key guard (ON by
-    default since round 11 — see :data:`_AUTO_GRAM_FREQ`; pass
-    ``max_fp_freq=None`` for the unguarded exhaustive join). Returns
-    (id_a, id_b, n_shared_fp)."""
+    full-gram entries, same join shape, same hot-key guard
+    (:func:`_shared_key_pairs`). Returns (id_a, id_b, n_shared_fp)."""
     inv = winnowed_fingerprints(df, text_col, id_col, k=min_len, window=window)
-    inv = inv.localCheckpoint(eager=False)  # both sides of the self-join
-    # Guard gate (round 12, guide §1.2 "don't compute things you throw
-    # away"): a fingerprint's doc-frequency is bounded by the corpus doc
-    # count, so when |docs| <= max_fp_freq NO fingerprint can exceed the
-    # cap and the hot-key pass (full groupBy-count over the index + anti
-    # join) is provably a no-op — one cheap count-star replaces it, the
-    # same gate remove_repeated_spans runs on its sampling probe. The
-    # guard itself is advisory routing for the join; below the bound the
-    # output is identical with or without it by construction.
-    if max_fp_freq is not None and df.count() > max_fp_freq:
-        inv = _drop_hot_grams(inv, "fp", max_fp_freq)
-    a = inv.select(F.col("id").alias("id_a"), "fp")
-    b = inv.select(F.col("id").alias("id_b"), "fp")
-    return (
-        a.join(b, on="fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_fp"))
-    )
+    return _shared_key_pairs(df, inv, "fp", "n_shared_fp")
 
 
 def repeated_passage_pairs(
@@ -1385,7 +1379,6 @@ def repeated_passage_pairs(
     text_col: str,
     id_col: str,
     min_len: int = 50,
-    max_gram_freq: int | None = _AUTO_GRAM_FREQ,
 ) -> DataFrame:
     """Exact repeated-passage detection (the signal behind Lee et al.
     2022's substring dedup): all doc pairs sharing at least one VERBATIM
@@ -1400,43 +1393,22 @@ def repeated_passage_pairs(
     Plan: grams are hashed to 8 bytes and made distinct INSIDE the
     per-row array (transform + array_distinct) before the explode, so no
     50-char string ever reaches an exchange and the per-doc dedup costs
-    zero shuffles (per-doc distinct == per-(id, gram) distinct);
-    ``max_gram_freq`` drops boilerplate grams present in more than that
-    many docs — the hot-key guard that keeps the join linear when a
-    site template repeats across millions of pages. ON BY DEFAULT since
-    round 11 (:data:`_AUTO_GRAM_FREQ` = 10k docs, the single-join-task
-    pair bound): a gram above it contributes a quadratic number of
-    OUTPUT pairs through one shuffle key, which no plan survives at
-    corpus scale — pass ``max_gram_freq=None`` to get the exhaustive
-    (and exhaustively sized) answer on small corpora. The guard costs
-    one map-side-combinable count per gram plus a broadcast anti-join
-    against the hot tail (bounded by |index| / max_gram_freq keys)."""
-    inv = (
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("id"),
-            _normalized_text_expr(F.col(text_col)).alias("__t"),
-        )
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(_gram_hashes_expr(F.col("__t"), min_len))
-            ).alias("gh"),
-        )
-        .localCheckpoint(eager=False)  # both sides of the self-join
+    zero shuffles (per-doc distinct == per-(id, gram) distinct). Grams
+    in more than :data:`_AUTO_GRAM_FREQ` docs are dropped — the hot-key
+    guard of :func:`_shared_key_pairs` that keeps the join linear when a
+    site template repeats across millions of pages: such a gram
+    contributes a quadratic number of OUTPUT pairs through one shuffle
+    key, which no plan survives at corpus scale."""
+    inv = ensure_parallelism(df).select(
+        F.col(id_col).alias("id"),
+        _normalized_text_expr(F.col(text_col)).alias("__t"),
+    ).select(
+        "id",
+        F.explode(F.array_distinct(_gram_hashes_expr(F.col("__t"), min_len))).alias(
+            "gh"
+        ),
     )
-    # same count-star gate as repeated_passage_pairs_winnowed: no gram's
-    # doc-frequency can exceed the corpus doc count, so the hot-key pass
-    # only runs when it could possibly fire (round 12, guide §1.2)
-    if max_gram_freq is not None and df.count() > max_gram_freq:
-        inv = _drop_hot_grams(inv, "gh", max_gram_freq)
-    a = inv.select(F.col("id").alias("id_a"), "gh")
-    b = inv.select(F.col("id").alias("id_b"), "gh")
-    return (
-        a.join(b, on="gh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
+    return _shared_key_pairs(df, inv, "gh", "n_shared")
 
 
 def _deletion_variants(s) -> "F.Column":
@@ -1627,36 +1599,15 @@ def edit_distance_candidate_stats(
 
 _POLY_B = 1000003  # odd -> invertible mod 2^64, so the prefix trick below works
 
-# cap on the heavy-hitter gram set collected by remove_repeated_spans'
-# sampling probe: bounds driver memory and the InSet literal. Grams past
-# the cap just stay on the window path (correct, merely un-split).
-_MAX_HOT_GRAMS = 16384
+# winnowing window of remove_repeated_spans' prefilter: ~2/(w+1) of the
+# gram stream reaches a shuffle; the prefilter is lossless at any window
+_SPANS_PREFILTER_WINDOW = 8
 
 # broadcast bound for the prefilter's flagged-fingerprint semi join:
 # 4M rows of 8-byte hashes ≈ 32 MB on the wire — comfortably inside
 # driver/executor budgets; above it the join is pinned to shuffle-hash
 # (both sides hash-partition on __fp; no driver collection at all).
 _FLAGGED_BROADCAST_MAX_ROWS = 4_000_000
-
-
-def _position_stream(docs_n: DataFrame, k: int) -> DataFrame:
-    """Position-tagged gram stream over (__id, __t, __len) docs: char
-    position __p (1-based), gram hash __gh of the k chars at __p, gram
-    length __glen; docs shorter than k chars carry one whole-string
-    gram. Shared by remove_repeated_spans' main stream and its
-    hot-gram sampling probe so both hash identically."""
-    starts = F.sequence(F.lit(1), F.greatest(F.col("__len") - F.lit(k - 1), F.lit(1)))
-    return docs_n.select(
-        "__id",
-        "__len",
-        F.explode(starts).alias("__p"),
-        F.col("__t"),
-    ).select(
-        "__id",
-        "__p",
-        F.xxhash64(F.substring(F.col("__t"), F.col("__p"), k)).alias("__gh"),
-        F.least(F.lit(k), F.col("__len")).alias("__glen"),
-    )
 
 
 def _winnow_candidate_ids(
@@ -1809,11 +1760,6 @@ def remove_repeated_spans(
     min_doc_freq: int = 2,
     keep_first: bool = False,
     out_col: str = "cleaned",
-    prefilter: bool = True,
-    prefilter_window: int = 8,
-    doc_freq_salts: int = 16,
-    hot_gram_sample: float = 0.01,
-    hot_gram_min_df: int = 1_000_000,
 ) -> DataFrame:
     """The REWRITE step of exact-substring dedup (Lee et al. 2022,
     arXiv:2107.06499 §3.1 — their suffix-array ExactSubstr pass):
@@ -1836,7 +1782,7 @@ def remove_repeated_spans(
     Distributed shape (suffix arrays don't shard; position-tagged char
     k-grams do): the position stream shuffles ``(8-byte gram hash, id,
     pos)`` — never text; duplicated-gram doc-frequencies are one keyed
-    count; flagged positions fuse to maximal spans with a per-doc
+    window; flagged positions fuse to maximal spans with a per-doc
     gaps-and-islands window (cumulative-max end, island = running count
     of gap starts); the normalized text shuffles exactly once (the
     spans-to-doc join) and kept segments reassemble with the same
@@ -1844,32 +1790,14 @@ def remove_repeated_spans(
     a DataFrame op on keys bounded by doc length — no suffix sort, no
     driver materialization.
 
-    ``prefilter=True`` (default) runs a lossless winnowing phase first
-    (:func:`_winnow_candidate_ids`): a narrow numpy rolling-hash pass
-    selects the docs that can possibly contain a duplicated span, and
-    the per-char stream below — the operator's dominant shuffle, ~28
-    bytes per character of corpus — runs only over those. On a corpus
-    where duplicated docs are a minority the amplification drops by
-    that minority fraction; output is bit-identical either way (the
-    parity pytest runs both).
-
-    Heavy-hitter grams are skew-split (round 10): an eager seeded probe
-    over a ``hot_gram_sample`` fraction of docs collects gram hashes
-    whose ESTIMATED corpus doc-frequency (sampled distinct docs /
-    sample fraction) reaches ``hot_gram_min_df``; those grams take an
-    exact two-phase salted distinct (``doc_freq_salts`` ways) +
-    broadcast flag join instead of the gram-keyed window, whose
-    partitions cannot be split and would serialize such a gram through
-    one sort task. The default threshold (1M docs) is deliberately at
-    cluster-fatal size: measured at sf10 with a gram planted in 40% of
-    docs (200k-doc frequency), the prefiltered window absorbs it FASTER
-    than splitting does (SCALE_TREND_R10_SPANS skew tiers), so the
-    split only pays for itself where a partition would outgrow an
-    executor — and the absolute-df threshold means local corpora never
-    trigger it while a 100 TB corpus' boilerplate does. Routing is
-    advisory — either path computes exact doc-freqs, so sampling error
-    and the parameters never change output (``hot_gram_sample=0``
-    disables the probe). See the inline note at the doc-freq stage."""
+    A lossless winnowing phase runs first (:func:`_winnow_candidate_ids`):
+    a narrow numpy rolling-hash pass selects the docs that can possibly
+    contain a duplicated span, and the per-char stream below — the
+    operator's dominant shuffle, ~28 bytes per character of corpus —
+    runs only over those. On a corpus where duplicated docs are a
+    minority the amplification drops by that minority fraction; output
+    is bit-identical to running the stream over every doc (the parity
+    pytest rebuilds that reference)."""
     k = min_len
     docs_n = df.select(
         F.col(id_col).alias("__id"),
@@ -1881,149 +1809,60 @@ def remove_repeated_spans(
     # contain a duplicated span, cutting its shuffle volume by the
     # non-duplicated fraction of the corpus (the sf100 disk-ceiling fix,
     # VERDICT r8 item 2/"what's wrong" 2)
-    if prefilter:
-        cand = _winnow_candidate_ids(
-            docs_n.filter(F.col("__id").isNotNull()), k, prefilter_window, min_doc_freq
-        )
-        docs_c = docs_n.join(cand, on="__id", how="left_semi").localCheckpoint(
-            eager=False
-        )  # pos stream AND span-reassembly text reuse it
-    else:
-        docs_c = docs_n
+    cand = _winnow_candidate_ids(
+        docs_n.filter(F.col("__id").isNotNull()), k, _SPANS_PREFILTER_WINDOW, min_doc_freq
+    )
+    docs_c = docs_n.join(cand, on="__id", how="left_semi").localCheckpoint(
+        eager=False
+    )  # pos stream AND span-reassembly text reuse it
 
-    # position-tagged gram stream: char position p (1-based), gram covers
+    # position-tagged gram stream: char position __p (1-based), gram hash
+    # __gh of the k chars at __p, gram length __glen — the gram covers
     # [p, p + glen); short docs (< k chars) carry one whole-string gram.
     # Null-id docs are excluded up front: their rewritten rows could
     # never rejoin the corpus anyway (the rebuild join key is __id, and
     # SQL null never equals), and the doc-freq below must count distinct
-    # non-null ids exactly like the old count_distinct did. Null-text
-    # and empty docs are excluded in BOTH prefilter branches so they
-    # always pass through untouched: without this, >= min_doc_freq
-    # null-text docs all collide on xxhash64(null)'s seed value, get
-    # flagged, and rebuild to '' on the prefilter=False path while the
-    # prefilter=True path (whose winnowing pass skips them) passes them
-    # through as NULL — breaking the documented bit-identical parity.
+    # non-null ids. Null-text and empty docs are excluded so they always
+    # pass through untouched, whatever the candidate set holds: >=
+    # min_doc_freq null-text docs would all collide on xxhash64(null)'s
+    # seed value, get flagged, and rebuild to '' instead of NULL.
     docs_pos = docs_c.filter(
         F.col("__id").isNotNull()
         & F.col("__t").isNotNull()
         & (F.col("__len") > 0)
     )
-    pos = _position_stream(ensure_parallelism(docs_pos), k)
+    starts = F.sequence(F.lit(1), F.greatest(F.col("__len") - F.lit(k - 1), F.lit(1)))
+    pos = ensure_parallelism(docs_pos).select(
+        "__id",
+        "__len",
+        F.explode(starts).alias("__p"),
+        F.col("__t"),
+    ).select(
+        "__id",
+        "__p",
+        F.xxhash64(F.substring(F.col("__t"), F.col("__p"), k)).alias("__gh"),
+        F.least(F.lit(k), F.col("__len")).alias("__glen"),
+    )
 
-    # exact per-gram doc-frequency. The base shape is the round-9 fused
-    # window — one full-stream shuffle keyed on the gram hash, with the
-    # doc-freq (max dense_rank), keep-first owner (min id), and each
-    # position's flag decision all local to that one sort. Measured at
-    # every local tier it beats the aggregate+join alternative ~3x
-    # (SCALE_TREND_R10_SPANS stage probes): the alternative shuffles the
-    # per-char stream twice, which is also what killed round 8 at sf100.
-    #
-    # Its one scale hazard: a window partition can never be split (no
-    # partial aggregation, and AQE skew handling applies to joins, not
-    # windows), so a corpus-wide boilerplate k-gram — present in 30-50%
-    # of a billion docs — would serialize a corpus-fraction of the
-    # stream through ONE sort task. Round 10 therefore splits heavy
-    # hitters out FIRST, the classic broadcast-the-head / shuffle-the-
-    # tail skew pattern:
-    #
-    #   1. an eager seeded probe greps a small doc sample for gram
-    #      hashes whose estimated corpus doc-frequency reaches
-    #      hot_gram_min_df — by construction a tiny set (<= corpus /
-    #      min_df grams), collected and inlined as an InSet filter.
-    #      Routing is advisory only: a missed hot gram still computes
-    #      EXACTLY in the window (just slower), a false positive
-    #      computes exactly in the hot path, so sampling error can
-    #      never change output.
-    #   2. hot positions: exact doc-freq via two-phase salted distinct
-    #      (groupBy (__gh, pmod(xxhash64(__id), S)) dedups map-side and
-    #      splits each hot gram's id set S ways; per-salt id sets are
-    #      disjoint so summing per-salt distinct counts is exact), then
-    #      a BROADCAST flag join — the hot gram table is bounded by the
-    #      hot set, positions never shuffle on this path at all.
-    #   3. cold positions: the fused window, now with every partition's
-    #      doc-freq bounded by ~hot_gram_min_df docs, so the sort task
-    #      ceiling no longer grows with corpus size. The default
-    #      min_df (1M) is deliberately cluster-fatal-sized: below it the
-    #      prefiltered window absorbs skew FASTER than splitting does
-    #      (measured at sf10 with a 200k-df planted gram), so local
-    #      corpora pay only the sampling probe.
-    S = doc_freq_salts
-    hot: list = []
-    # Probe gate (round 11, guide §1.2 "don't compute things you throw
-    # away"): a gram's doc-frequency is bounded by the corpus doc count,
-    # so when |docs| < hot_gram_min_df NO gram can reach the hot
-    # threshold and the sampling probe (sample + per-char explode +
-    # count_distinct + collect — measured ~20% of the operator at sf0.1,
-    # round 10's one attributed regression) is provably a no-op. One
-    # cheap count-star replaces it below the bound; routing is advisory
-    # (either path computes exact doc-freqs), so the gate can never
-    # change output — only skip a probe that could not have fired.
-    # ADVICE r11: count the stream the window stage actually sees, not the
-    # raw input. With the prefilter on, docs_pos reads the checkpointed
-    # candidate table — whose materialization the probe and the position
-    # stream need next anyway, so the gate adds no extra corpus pass above
-    # the bound — and the bound is tighter (null-id/null-text docs and
-    # non-candidate docs can't contribute window positions). With the
-    # prefilter off, the raw count stays: counting the un-checkpointed
-    # normalized stream would re-run the normalize regex for the gate alone.
-    if hot_gram_sample > 0 and (docs_pos if prefilter else df).count() < hot_gram_min_df:
-        hot_gram_sample = 0.0
-    if hot_gram_sample > 0:
-        # sampled-count threshold for an estimated corpus df of
-        # hot_gram_min_df; floored at 8 so tiny samples can't promote
-        # single-digit-count noise
-        min_sampled = max(8, int(hot_gram_min_df * hot_gram_sample))
-        hot = [
-            r["__gh"]
-            for r in _position_stream(
-                docs_pos.sample(fraction=min(hot_gram_sample, 1.0), seed=7), k
-            )
-            .groupBy("__gh")
-            .agg(F.count_distinct("__id").alias("__c"))
-            .filter(F.col("__c") >= min_sampled)
-            .select("__gh")
-            .limit(_MAX_HOT_GRAMS)
-            .collect()
-        ]
-
-    def _exact_hot_hits(pos_hot: DataFrame) -> DataFrame:
-        gram = (
-            pos_hot.groupBy(
-                "__gh", F.pmod(F.xxhash64("__id"), F.lit(S)).alias("__salt")
-            )
-            .agg(
-                F.count_distinct("__id").alias("__pdf"),
-                F.min("__id").alias("__pown"),
-            )
-            .groupBy("__gh")
-            .agg(F.sum("__pdf").alias("__df"), F.min("__pown").alias("__owner"))
-            .filter(F.col("__df") >= min_doc_freq)
-            .select("__gh", "__owner")
-        )
-        out = pos_hot.join(F.broadcast(gram), on="__gh")
-        if keep_first:
-            out = out.filter(F.col("__id") != F.col("__owner"))
-        return out.select("__id", "__p", "__glen")
-
-    def _window_hits(pos_cold: DataFrame) -> DataFrame:
-        w_gh = Window.partitionBy("__gh")
-        flagged_pos = pos_cold.withColumn(
-            "__dr", F.dense_rank().over(w_gh.orderBy("__id"))
-        ).withColumn("__df", F.max("__dr").over(w_gh))
-        if keep_first:
-            flagged_pos = flagged_pos.withColumn("__owner", F.min("__id").over(w_gh))
-        out = flagged_pos.filter(F.col("__df") >= min_doc_freq)
-        if keep_first:
-            out = out.filter(F.col("__id") != F.col("__owner"))
-        return out.select("__id", "__p", "__glen")
-
-    if hot:
-        is_hot = F.col("__gh").isin(hot)
-        hits = _window_hits(pos.filter(~is_hot)).unionByName(
-            _exact_hot_hits(pos.filter(is_hot))
-        )
-    else:
-        hits = _window_hits(pos)
+    # exact per-gram doc-frequency: the round-9 fused window — one
+    # full-stream shuffle keyed on the gram hash, with the doc-freq (max
+    # dense_rank), keep-first owner (min id), and each position's flag
+    # decision all local to that one sort. Measured at every local tier
+    # it beats the aggregate+join alternative ~3x: the alternative
+    # shuffles the per-char stream twice, which is also what killed
+    # round 8 at sf100. A window partition never splits, so a corpus-wide
+    # boilerplate gram sorts in one task; at sf10 with a gram planted in
+    # 40% of docs the prefiltered window still absorbed it faster than a
+    # sampled heavy-hitter split did (SCALE_TREND_R10_SPANS skew tiers).
+    w_gh = Window.partitionBy("__gh")
+    flagged_pos = pos.withColumn(
+        "__dr", F.dense_rank().over(w_gh.orderBy("__id"))
+    ).withColumn("__df", F.max("__dr").over(w_gh))
+    if keep_first:
+        flagged_pos = flagged_pos.withColumn("__owner", F.min("__id").over(w_gh))
+    hits = flagged_pos.filter(F.col("__df") >= min_doc_freq)
+    if keep_first:
+        hits = hits.filter(F.col("__id") != F.col("__owner"))
     hits = hits.select("__id", "__p", (F.col("__p") + F.col("__glen")).alias("__e"))
 
     # gaps-and-islands: a new island starts when this gram begins past

@@ -4503,12 +4503,11 @@ def q_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     the injected copies must surface with their full gram counts, plus
     any natural near-dups that share long runs. The char-gram inverted
     index IS the answer (k-gram sharing == k-substring sharing); no
-    verification pass exists to hide recall loss. Runs with the DEFAULT
-    hot-gram guard (round 11: max_gram_freq=_AUTO_GRAM_FREQ, the
-    single-join-task pair bound) and the oracle replays the same
-    doc-frequency cutoff, so the registry pins the guarded semantics —
-    the shipping default — rather than an unguarded variant nobody
-    should run on a real corpus."""
+    verification pass exists to hide recall loss. The operator's
+    hot-gram guard (grams in more than _AUTO_GRAM_FREQ docs, the
+    single-join-task pair bound, are dropped) always runs, and the
+    oracle replays the same doc-frequency cutoff, so the registry pins
+    the guarded semantics."""
     from epic_pandas_spark.extensions.dedup import repeated_passage_pairs
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

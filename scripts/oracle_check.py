@@ -10,7 +10,8 @@ Usage:
 
 Compare semantics (mirrors the driver): column-name sets must be equal;
 row multisets compare order-insensitively with floats rounded to 6
-decimals; queries with no oracle record a rows-only smoke result.
+decimals (a value that rounds to zero compares as 0.0, whatever its
+sign); queries with no oracle record a rows-only smoke result.
 """
 
 from __future__ import annotations
@@ -36,7 +37,8 @@ def _norm_rows(df):
     rows = sorted(
         tuple(
             "null" if v is None or (isinstance(v, float) and pd.isna(v))
-            else str(round(v, 6)) if isinstance(v, float) else str(v)
+            # + 0.0 turns a rounded -0.0 into 0.0
+            else str(round(v, 6) + 0.0) if isinstance(v, float) else str(v)
             for v in row
         )
         for row in df[cols].itertuples(index=False, name=None)

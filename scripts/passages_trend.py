@@ -1,21 +1,18 @@
 """repeated_passage_pairs growth trend (VERDICT r10 "what's wrong" #1):
-price the round-11 DEFAULT hot-gram guard on the pair self-join, in both
-the registry's regular injected-copy construction and an adversarial
-boilerplate regime (one ~90-char sentence planted in 40% of docs, so each
-of its >=50-char grams carries a 0.4N doc frequency).
+price the operator's hot-gram guard on the pair self-join, in both the
+registry's regular injected-copy construction and an adversarial
+boilerplate regime (``--skew``: one ~90-char sentence planted in 40% of
+docs, so each of its >=50-char grams carries a 0.4N doc frequency).
 
-The un-guarded join emits C(df, 2) OUTPUT pairs through ONE join key per
-hot gram — quadratic in corpus size, un-splittable by AQE because the
-skew is the answer, not the plan. The guard (max_gram_freq =
-_AUTO_GRAM_FREQ = 10k by default) drops such grams via one
-map-side-combinable doc-frequency count + a broadcast ANTI join against
-the hot tail, keeping output linear in the number of genuinely-duplicated
-docs. Each tier asserts the signal survives: every injected exact-copy
-pair must still surface in the guarded output.
-
-The unguarded path is priced only where it is survivable (pair output
-fits this host); above that it is SKIPPED with the projected output size
-recorded — the point of the trend is that the default no longer runs it.
+A gram in D docs emits C(D, 2) OUTPUT pairs through ONE join key —
+quadratic in corpus size, un-splittable by AQE because the skew is the
+answer, not the plan. The guard drops grams in more than
+_AUTO_GRAM_FREQ = 10k docs via one map-side-combinable doc-frequency
+count + a broadcast ANTI join against the hot tail. Each tier asserts
+the signal survives: every injected exact-copy pair must still surface
+in the guarded output. A tier whose exact projected pair-join size
+outgrows this host's spill budget is skipped with the projection
+recorded.
 
 Usage:
   python scripts/passages_trend.py                  # regular tiers
@@ -40,12 +37,8 @@ BOILER = (
 # the pair join's INTERMEDIATE row count is exactly sum(C(df,2)) over
 # kept grams (map-side combine can't reduce mostly-unique groups), ~24
 # bytes each through a shuffle; cap what we are willing to spill on this
-# host (1.2e9 rows ~ 30 GB, under half the node's free disk). Variants
-# projecting above it are skipped with the exact projection recorded —
-# unguarded at sf10-skew projects 1.68e12 rows (~40 TB), the regime the
-# default guard exists to refuse, while the 10k default projects 9.7e8
-# and completes.
-_UNGUARDED_INTERMEDIATE_BUDGET = 1_200_000_000
+# host (1.2e9 rows ~ 30 GB, under half the node's free disk).
+_INTERMEDIATE_BUDGET = 1_200_000_000
 
 
 def _corpus(spark, sf_dir: str, skew: bool):
@@ -82,14 +75,13 @@ def run_tier(sf_dir: str, skew: bool) -> dict:
     res: dict = {"n_input_docs": n_in, "n_injected_copies": n_copies}
 
     # EXACT per-gram doc-frequency histogram (the same aggregate the
-    # guard itself runs): for any threshold t, sum(C(df,2)) over kept
-    # grams is the EXACT intermediate row count of the pair join — the
-    # projection that decides whether a variant is survivable on this
-    # host before a single pair row is shuffled. This catches both the
-    # planted boilerplate AND the synthetic corpus's natural template
-    # sentences, whose df grows with N (the sf10 guarded run was killed
-    # at 40+ GB of spill on natural duplication alone before this gate
-    # existed).
+    # guard itself runs): sum(C(df,2)) over kept grams is the EXACT
+    # intermediate row count of the pair join — the projection that
+    # decides whether the run is survivable on this host before a single
+    # pair row is shuffled. This catches both the planted boilerplate AND
+    # the synthetic corpus's natural template sentences, whose df grows
+    # with N (the sf10 guarded run was killed at 40+ GB of spill on
+    # natural duplication alone before this gate existed).
     inv = u.select(
         F.col("doc_id").alias("id"),
         _normalized_text_expr(F.col("text")).alias("__t"),
@@ -100,96 +92,51 @@ def run_tier(sf_dir: str, skew: bool) -> dict:
     freq = (
         inv.groupBy("gh").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") >= 2)
     ).localCheckpoint(eager=False)
-
-    def project(thresh: int | None) -> dict:
-        kept = freq if thresh is None else freq.filter(F.col("df") <= thresh)
-        hot = 0 if thresh is None else freq.filter(F.col("df") > thresh).count()
-        row = kept.agg(
-            F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("inter"),
-            F.max("df").alias("max_df"),
-        ).collect()[0]
-        return {
-            "n_hot_grams_dropped": hot,
-            "max_kept_df": row["max_df"],
-            "exact_intermediate_join_rows": int(row["inter"] or 0),
-        }
-
-    variants = [("guarded_default", _AUTO_GRAM_FREQ)]
-    if skew:
-        # force the guard below the planted 0.4N doc frequency so the
-        # drop actually routes at tiers where 0.4N < _AUTO_GRAM_FREQ
-        variants.append(("guarded_forced", max(4, n_in // 5)))
-    variants.append(("unguarded", None))
-
-    # adaptive fit — the actual 100-TB operating procedure: ONE agg over
-    # the df histogram projects the exact pair-join size at every
-    # candidate threshold; run with the largest one that fits the host
-    # budget. (The default 10k cap bounds the per-KEY task; TOTAL join
-    # size is the corpus's duplication profile, which this histogram
-    # measures before committing to the shuffle.)
-    cand_ts = [2**i for i in range(2, 15)]  # 4 .. 16384
-    fit_row = freq.agg(
-        *[
-            F.sum(
-                F.when(F.col("df") <= t, F.col("df") * (F.col("df") - 1) / 2)
-            ).alias(f"t{t}")
-            for t in cand_ts
-        ]
+    hot = freq.filter(F.col("df") > _AUTO_GRAM_FREQ).count()
+    row = freq.filter(F.col("df") <= _AUTO_GRAM_FREQ).agg(
+        F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("inter"),
+        F.max("df").alias("max_df"),
     ).collect()[0]
-    t_fit = max(
-        (t for t in cand_ts if (fit_row[f"t{t}"] or 0) <= _UNGUARDED_INTERMEDIATE_BUDGET),
-        default=None,
-    )
-    if t_fit is not None and t_fit < _AUTO_GRAM_FREQ:
-        variants.append(("guarded_fit", t_fit))
-
-    # untimed warmup: codegen + scan warmup must not bias the first variant
-    repeated_passage_pairs(u.limit(500), "text", "doc_id", min_len=50).agg(
-        F.sum("n_shared")
-    ).collect()
-
-    for label, thresh in variants:
-        proj = project(thresh)
-        if proj["exact_intermediate_join_rows"] > _UNGUARDED_INTERMEDIATE_BUDGET:
-            res[label] = {
-                "max_gram_freq": thresh,
-                "skipped": True,
-                **proj,
-                "reason": (
-                    "exact projected intermediate join rows exceed the "
-                    "host spill budget — at ~24 B/row this run would "
-                    "outgrow free disk; on a real corpus this projection "
-                    "is the signal to lower max_gram_freq or shard the "
-                    "pair consumer"
-                ),
-            }
-            continue
-        t0 = time.monotonic()
-        out = repeated_passage_pairs(
-            u, "text", "doc_id", min_len=50, max_gram_freq=thresh
-        )
-        row = out.agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("n_shared").alias("sum_shared"),
-            F.sum(
-                (F.col("id_b") - F.col("id_a") == 1000000).cast("long")
-            ).alias("n_copy_pairs"),
-        ).collect()[0]
-        res[label] = {
-            "max_gram_freq": thresh,
-            "wall_sec": round(time.monotonic() - t0, 2),
-            "n_pairs": row["n_pairs"],
-            "sum_shared": row["sum_shared"],
-            "n_copy_pairs": row["n_copy_pairs"],
+    proj = {
+        "n_hot_grams_dropped": hot,
+        "max_kept_df": row["max_df"],
+        "exact_intermediate_join_rows": int(row["inter"] or 0),
+    }
+    if proj["exact_intermediate_join_rows"] > _INTERMEDIATE_BUDGET:
+        res["guarded_default"] = {
+            "max_gram_freq": _AUTO_GRAM_FREQ,
+            "skipped": True,
             **proj,
+            "reason": (
+                "exact projected intermediate join rows exceed the "
+                "host spill budget — at ~24 B/row this run would "
+                "outgrow free disk; on a real corpus this projection "
+                "is the signal to shard the pair consumer"
+            ),
         }
-        # the SIGNAL survives the guard: every injected exact copy still
-        # pairs with its original (copies share doc-unique grams — the
-        # junction/body grams boilerplate can never saturate)
-        assert row["n_copy_pairs"] >= n_copies, (
-            f"{label}: injected copy pairs lost: "
-            f"{row['n_copy_pairs']} < {n_copies}"
-        )
+        return res
+    t0 = time.monotonic()
+    row = repeated_passage_pairs(u, "text", "doc_id", min_len=50).agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.sum("n_shared").alias("sum_shared"),
+        F.sum((F.col("id_b") - F.col("id_a") == 1000000).cast("long")).alias(
+            "n_copy_pairs"
+        ),
+    ).collect()[0]
+    res["guarded_default"] = {
+        "max_gram_freq": _AUTO_GRAM_FREQ,
+        "wall_sec": round(time.monotonic() - t0, 2),
+        "n_pairs": row["n_pairs"],
+        "sum_shared": row["sum_shared"],
+        "n_copy_pairs": row["n_copy_pairs"],
+        **proj,
+    }
+    # the SIGNAL survives the guard: every injected exact copy still
+    # pairs with its original (copies share doc-unique grams — the
+    # junction/body grams boilerplate can never saturate)
+    assert row["n_copy_pairs"] >= n_copies, (
+        f"injected copy pairs lost: {row['n_copy_pairs']} < {n_copies}"
+    )
     return res
 
 
@@ -216,18 +163,15 @@ def main() -> None:
         "query": "repeated_passage_pairs" + ("_boilerplate_skew" if skew else ""),
         "tiers": tiers,
         "note": (
-            "round-11 default guard: max_gram_freq=_AUTO_GRAM_FREQ (10k "
-            "docs, the single-join-task pair bound); hot grams dropped "
-            "via one doc-frequency count + broadcast ANTI join against "
-            "the hot tail. Every tier asserts all injected exact-copy "
-            "pairs survive the guard."
+            "hot-gram guard: grams in more than _AUTO_GRAM_FREQ (10k "
+            "docs, the single-join-task pair bound) dropped via one "
+            "doc-frequency count + broadcast ANTI join against the hot "
+            "tail. Every tier asserts all injected exact-copy pairs "
+            "survive the guard; a tier projecting more than "
+            f"{_INTERMEDIATE_BUDGET:,} intermediate join rows is skipped "
+            "with the projection recorded."
             + (
-                " Skew mode: one boilerplate sentence planted in 40% of "
-                "docs; guarded_forced uses threshold n/5 (below the "
-                "planted 0.4N df) so the drop routes at every tier; the "
-                "unguarded join is priced only under the "
-                f"{_UNGUARDED_INTERMEDIATE_BUDGET:,}-intermediate-row "
-                "budget and skipped with projected sizes above it."
+                " Skew mode: one boilerplate sentence planted in 40% of docs."
                 if skew
                 else ""
             )

@@ -461,7 +461,8 @@ def test_semantic_decontaminate_flags_near_vectors(spark):
     assert {r["vec_id"] for r in strict.collect()} == {1, 4}
 
 
-def test_repeated_passage_pairs_shared_run(spark):
+def test_repeated_passage_pairs_shared_run(spark, monkeypatch):
+    from epic_pandas_spark.extensions import dedup as dd
     from epic_pandas_spark.extensions.dedup import repeated_passage_pairs
 
     run = "the quick brown fox jumps over the lazy dog 0123456789abcde"
@@ -488,18 +489,18 @@ def test_repeated_passage_pairs_shared_run(spark):
         [(i, "zzz " + run + " q" + str(i)) for i in range(1, 4)],
         "doc_id long, text string",
     )
-    guarded = repeated_passage_pairs(df2, "text", "doc_id", min_len=50, max_gram_freq=2)
+    monkeypatch.setattr(dd, "_AUTO_GRAM_FREQ", 2)
+    guarded = repeated_passage_pairs(df2, "text", "doc_id", min_len=50)
     assert guarded.count() == 0
 
 
-def test_repeated_passage_pairs_guard_on_by_default(spark):
-    """Round-11 default flip (VERDICT r10 "what's wrong" #1): the
-    hot-gram guard is ON by default at the single-join-task pair bound
+def test_repeated_passage_pairs_guard_on_by_default(spark, monkeypatch):
+    """The hot-gram guard always runs at the single-join-task pair bound
     (_AUTO_GRAM_FREQ docs). A boilerplate gram above the threshold must
     be dropped from both pair generation AND n_shared counts; pairs
-    connected only by boilerplate disappear; max_gram_freq=None restores
-    the exhaustive answer. Exercised with a tiny threshold via
-    monkeypatched default so the test corpus stays small."""
+    connected only by boilerplate disappear; a cap above the corpus size
+    gives the exhaustive answer. Exercised with a tiny monkeypatched cap
+    so the test corpus stays small."""
     from epic_pandas_spark.extensions import dedup as dd
 
     boiler = "copyright notice all rights reserved unauthorized copying prohibited"
@@ -508,47 +509,31 @@ def test_repeated_passage_pairs_guard_on_by_default(spark):
     rows += [(6, "xx " + uniq + " " + boiler), (7, "yy " + uniq + " " + boiler)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
+    def pairs(fn, **kw):
+        return {
+            (r[0], r[1]): r[2]
+            for r in fn(df, "text", "doc_id", min_len=50, **kw).collect()
+        }
+
     # guard at freq<=4: boiler grams (df=7) drop; (6,7) survives on uniq
-    guarded = {
-        (r["id_a"], r["id_b"]): r["n_shared"]
-        for r in dd.repeated_passage_pairs(
-            df, "text", "doc_id", min_len=50, max_gram_freq=4
-        ).collect()
-    }
+    monkeypatch.setattr(dd, "_AUTO_GRAM_FREQ", 4)
+    guarded = pairs(dd.repeated_passage_pairs)
+    # winnowed variant honors the same guard semantics
+    winn = set(pairs(dd.repeated_passage_pairs_winnowed, window=4))
     assert set(guarded) == {(6, 7)}
-    unguarded = {
-        (r["id_a"], r["id_b"]): r["n_shared"]
-        for r in dd.repeated_passage_pairs(
-            df, "text", "doc_id", min_len=50, max_gram_freq=None
-        ).collect()
-    }
+    assert (6, 7) in winn and not any(p for p in winn if p[0] < 6)
+    # a cap above the corpus size never fires: the exhaustive answer
+    monkeypatch.setattr(dd, "_AUTO_GRAM_FREQ", 100)
+    unguarded = pairs(dd.repeated_passage_pairs)
     # unguarded: every pair of the 7 boiler-carrying docs shares grams
     assert len(unguarded) == 21 and (6, 7) in unguarded
     # guarded n_shared excludes the hot grams (strictly fewer than full)
     assert 0 < guarded[(6, 7)] < unguarded[(6, 7)]
-    # the DEFAULT is the guard (10k), not None — a corpus that small is
-    # untouched, so default == unguarded here, and the signature default
-    # is the documented constant
-    import inspect
-
-    sig = inspect.signature(dd.repeated_passage_pairs)
-    assert sig.parameters["max_gram_freq"].default == dd._AUTO_GRAM_FREQ
-    sigw = inspect.signature(dd.repeated_passage_pairs_winnowed)
-    assert sigw.parameters["max_fp_freq"].default == dd._AUTO_GRAM_FREQ
-    default_out = {
-        (r["id_a"], r["id_b"]): r["n_shared"]
-        for r in dd.repeated_passage_pairs(df, "text", "doc_id", min_len=50).collect()
-    }
-    assert default_out == unguarded
-
-    # winnowed variant honors the same guard semantics
-    winn = {
-        (r["id_a"], r["id_b"])
-        for r in dd.repeated_passage_pairs_winnowed(
-            df, "text", "doc_id", min_len=50, window=4, max_fp_freq=4
-        ).collect()
-    }
-    assert (6, 7) in winn and not any(p for p in winn if p[0] < 6)
+    # the shipped cap is the documented 10k; a corpus that small is
+    # untouched by it, so the default answer is the exhaustive one
+    monkeypatch.undo()
+    assert dd._AUTO_GRAM_FREQ == 10_000
+    assert pairs(dd.repeated_passage_pairs) == unguarded
 
 
 def test_winnowed_fingerprints_guarantee_and_density(spark):
@@ -1367,18 +1352,16 @@ def test_remove_repeated_spans_random_corpus_model(spark):
     assert got == want
 
 
-def test_remove_repeated_spans_prefilter_parity(spark):
-    """The winnowing prefilter must be LOSSLESS: prefilter=True and
-    prefilter=False produce bit-identical output on a corpus built to
-    stress it — duplicated long spans, short-doc exact dups (< k chars,
-    the whole-string-gram path), unique docs, empty and null text, and
-    a window larger than k (the kp=1 clamp)."""
+def test_remove_repeated_spans_prefilter_parity(spark, monkeypatch):
+    """The winnowing prefilter must be LOSSLESS: output is bit-identical
+    to the per-char stream over every doc (every non-null id a
+    candidate) on a corpus built to stress it — duplicated long spans,
+    short-doc exact dups (< k chars, the whole-string-gram path), unique
+    docs, empty and null text — and a window larger than k (the kp=1
+    clamp) still admits every rewritten doc."""
     import random
 
-    from epic_pandas_spark.extensions.dedup import (
-        _winnow_candidate_ids,
-        remove_repeated_spans,
-    )
+    from epic_pandas_spark.extensions import dedup as dd
     from pyspark.sql import functions as F
 
     rng = random.Random(99)
@@ -1395,97 +1378,43 @@ def test_remove_repeated_spans_prefilter_parity(spark):
     rows += [(100, "tiny dup"), (101, "tiny dup"), (102, "tiny unique")]  # < k chars
     # TWO null-text docs: >= min_doc_freq of them would all collide on
     # xxhash64(null)'s seed and rebuild to '' if they ever reached the
-    # pos stream (the round-9 prefilter=False path did exactly that,
-    # while prefilter=True passed them through as NULL — parity break)
+    # pos stream, which the unfiltered reference below feeds them to
     rows += [(200, ""), (201, None), (202, None), (None, shared + " " + shared)]
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(5)
 
-    for window in (8, 100):  # 100 > k exercises the clamp
-        a = {
+    def run():
+        return {
             r["doc_id"]: (r["cleaned"], r["n_removed_chars"])
-            for r in remove_repeated_spans(
-                df, "text", "doc_id", min_len=40, prefilter=True, prefilter_window=window
-            ).collect()
+            for r in dd.remove_repeated_spans(df, "text", "doc_id", min_len=40).collect()
         }
-        b = {
-            r["doc_id"]: (r["cleaned"], r["n_removed_chars"])
-            for r in remove_repeated_spans(
-                df, "text", "doc_id", min_len=40, prefilter=False
-            ).collect()
-        }
-        assert a == b
-        assert len(a) == len(rows)
-    # the doc-freq salt count never changes output: S=1 is the unsalted
-    # degenerate form, S=5 doesn't divide anything evenly
-    for salts in (1, 5):
-        c = {
-            r["doc_id"]: (r["cleaned"], r["n_removed_chars"])
-            for r in remove_repeated_spans(
-                df, "text", "doc_id", min_len=40, prefilter=False,
-                doc_freq_salts=salts,
-            ).collect()
-        }
-        assert c == a
+
+    a = run()
+    # unfiltered reference: every non-null id is a candidate (the operator
+    # already drops null ids before calling the prefilter)
+    monkeypatch.setattr(
+        dd, "_winnow_candidate_ids", lambda docs_n, k, window, min_df: docs_n.select("__id")
+    )
+    b = run()
+    monkeypatch.undo()
+    assert a == b
+    assert len(a) == len(rows)
     assert a[100][1] > 0 and a[101][1] > 0  # short exact dups caught
     assert a[102] == ("tiny unique", 0)
     assert a[201] == (None, None) and a[202] == (None, None)  # null text untouched
 
-    # HOT-GRAM SPLIT path: with a full deterministic sample and a tiny
-    # df threshold, the boilerplate grams route through the salted
-    # distinct + broadcast flag join instead of the window — output must
-    # be identical to the probe-disabled run (routing is advisory)
-    boiler_rows = [
-        (i, f"unique preamble {i} " + shared + f" unique tail {i}")
-        for i in range(30)
-    ] + [(100 + i, f"no duplicated content here at all number {i} with filler")
-         for i in range(10)]
-    bdf = spark.createDataFrame(boiler_rows, "doc_id long, text string")
-    hot_on = {
-        r["doc_id"]: (r["cleaned"], r["n_removed_chars"])
-        for r in remove_repeated_spans(
-            bdf, "text", "doc_id", min_len=40,
-            hot_gram_sample=1.0, hot_gram_min_df=10,
-        ).collect()
-    }
-    hot_off = {
-        r["doc_id"]: (r["cleaned"], r["n_removed_chars"])
-        for r in remove_repeated_spans(
-            bdf, "text", "doc_id", min_len=40, hot_gram_sample=0.0
-        ).collect()
-    }
-    assert hot_on == hot_off
-    assert sum(v[1] for v in hot_on.values()) > 0  # boiler actually removed
-    # keep_first consistency across the two paths too
-    hot_on_kf = {
-        r["doc_id"]: r["n_removed_chars"]
-        for r in remove_repeated_spans(
-            bdf, "text", "doc_id", min_len=40, keep_first=True,
-            hot_gram_sample=1.0, hot_gram_min_df=10,
-        ).collect()
-    }
-    hot_off_kf = {
-        r["doc_id"]: r["n_removed_chars"]
-        for r in remove_repeated_spans(
-            bdf, "text", "doc_id", min_len=40, keep_first=True,
-            hot_gram_sample=0.0,
-        ).collect()
-    }
-    assert hot_on_kf == hot_off_kf
-
-    # the prefilter actually prunes: non-duplicated docs are not candidates
+    # the prefilter admits every rewritten doc at window 8 and at window
+    # 100 > k (the clamp), and actually prunes at the operator's window
     docs_n = df.select(
         F.col("doc_id").alias("__id"),
         F.regexp_replace(F.lower("text"), r"\s+", " ").alias("__t"),
-    )
-    cand = {
-        r["__id"]
-        for r in _winnow_candidate_ids(
-            docs_n.filter(F.col("__id").isNotNull()), 40, 8, 2
-        ).collect()
-    }
+    ).filter(F.col("__id").isNotNull())
     dup_docs = {d for d, (_, n) in a.items() if n is not None and n > 0}
-    assert dup_docs <= cand, "false negative: a rewritten doc was not a candidate"
-    assert len(cand) < len(rows), "prefilter pruned nothing on a mostly-unique corpus"
+    cand = {
+        w: {r["__id"] for r in dd._winnow_candidate_ids(docs_n, 40, w, 2).collect()}
+        for w in (8, 100)
+    }
+    assert dup_docs <= cand[8] and dup_docs <= cand[100], "false negative"
+    assert len(cand[8]) < len(rows), "prefilter pruned nothing on a mostly-unique corpus"
 
 
 def test_tune_lsh_bands_scurve_properties():

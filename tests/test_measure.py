@@ -81,6 +81,20 @@ def test_every_script_imports(name, monkeypatch):
     importlib.import_module(name)
 
 
+def test_oracle_compare_treats_signed_zero_as_zero():
+    """The 6-decimal rule: -0.0, -1e-9 and 0.0 all round to zero and
+    compare equal; 1e-5 still differs from 0.0."""
+    import pandas as pd
+
+    from scripts import oracle_check
+
+    def norm(vals):
+        return oracle_check._norm_rows(pd.DataFrame({"w": vals}))[0]
+
+    assert norm([-0.0]) == norm([-1e-9]) == norm([0.0]) == norm([1e-9])
+    assert norm([1e-5]) != norm([0.0])
+
+
 def test_tiers_cover_the_generated_decades():
     assert [(label, mult) for label, _, mult in measure.TIERS] == [
         ("sf0.01", 1), ("sf0.1", 10), ("sf1", 100), ("sf10", 1000), ("sf100", 10000),
