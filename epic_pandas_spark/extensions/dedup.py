@@ -159,23 +159,28 @@ def jaccard_pairs(
     ubiquitous shingles changes scores slightly; leave None for exact
     semantics on modest data.
     """
-    words = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        word_ngrams_expr(F.col(text_col), n=shingle_words).alias("ws"),
-    ).filter(F.size("ws") > 0)
-    sizes = words.select("id", "ws", F.size("ws").alias("n"))
     # the self-join references the inverted index twice; a lazy local
-    # checkpoint materializes it once instead of recomputing the shingle
-    # expressions on both branches (measured 8.2s -> 3.0s at 5k docs).
+    # checkpoint materializes the shingle sets once instead of recomputing
+    # the shingle expressions on both branches (measured 8.2s -> 3.0s at
+    # 5k docs). It sits BEFORE the explode: the optimizer infers
+    # size(ws) > 0 from an explode and would push that filter, n-gram
+    # expression and all, below ensure_parallelism's exchange.
     # Shingles join as 8-byte xxhash64 keys, never as strings — the
     # shuffle carries fixed-width longs (collision odds ~|shingles|²/2^64,
     # immaterial; the set semantics are unchanged since shingle arrays are
-    # already distinct per doc).
-    inv = (
-        sizes.select("id", "n", F.explode("ws").alias("w"))
-        .withColumn("w", F.xxhash64("w"))
+    # already distinct per doc). Docs without shingles explode to nothing.
+    words = (
+        ensure_parallelism(df).select(
+            F.col(id_col).alias("id"),
+            F.transform(
+                word_ngrams_expr(F.col(text_col), n=shingle_words),
+                lambda g: F.xxhash64(g),
+            ).alias("wh"),
+        )
+        .select("id", F.size("wh").alias("n"), "wh")
         .localCheckpoint(eager=False)
     )
+    inv = words.select("id", "n", F.explode("wh").alias("w"))
     if max_doc_freq is not None:
         dfreq = inv.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
         inv = inv.join(F.broadcast(dfreq.filter(F.col("df") <= max_doc_freq)), "w", "left_semi")
@@ -250,8 +255,8 @@ def jaccard_pairs_prefix(
                 )
             ).alias("wh"),
         )
-        .filter(F.size("wh") > 0)
         .localCheckpoint(eager=False)  # reused by ranking AND verification
+        .filter(F.size("wh") > 0)  # materialized column: see ensure_parallelism
     )
     inv = words.select("id", F.size("wh").alias("n"), F.explode("wh").alias("w"))
     # every ceil below carries a 1e-6 slack: t·n can ROUND ABOVE its exact
@@ -467,10 +472,14 @@ def _lsh_words_and_candidates(
     if n_hashes % bands != 0:
         raise ValueError("bands must divide n_hashes")
     r = n_hashes // bands
-    words = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        word_ngrams_expr(F.col(text_col), n=shingle_words).alias("ws"),
-    ).filter(F.size("ws") > 0).localCheckpoint(eager=False)  # reused by banding AND verification
+    words = (
+        ensure_parallelism(df).select(
+            F.col(id_col).alias("id"),
+            word_ngrams_expr(F.col(text_col), n=shingle_words).alias("ws"),
+        )
+        .localCheckpoint(eager=False)  # reused by banding AND verification
+        .filter(F.size("ws") > 0)  # materialized column: see ensure_parallelism
+    )
     signed = minhash_signatures(words, n_hashes=n_hashes, seed=seed)
     banded = signed.select(
         "id",
@@ -944,13 +953,13 @@ def minhash_index(
             F.col(id_col).alias("id"),
             word_ngrams_expr(F.col(text_col), n=shingle_words).alias("ws"),
         )
-        .filter(F.size("ws") > 0)
         .select(
             "id",
             F.transform("ws", lambda s: F.xxhash64(s)).alias("ws"),
         )
         .select("id", "ws", F.size("ws").alias("n"))
         .localCheckpoint(eager=False)  # feeds both signatures and the store
+        .filter(F.col("n") > 0)  # materialized column: see ensure_parallelism
     )
     r = n_hashes // bands
     signed = minhash_signatures(

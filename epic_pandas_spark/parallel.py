@@ -95,7 +95,17 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     Metadata-only probe (no job); a NO-OP whenever the input already has
     enough partitions — which is exactly the 100 TB case, where the scan
     supplies thousands of splits and an unconditional repartition would
-    add a full-payload shuffle for nothing."""
+    add a full-payload shuffle for nothing.
+
+    Pitfall: the optimizer pushes any later DETERMINISTIC filter below
+    this exchange, expression and all. ``filter(size(ngrams) > 0)`` after
+    the fan-out therefore runs the n-gram expression in the few scan
+    tasks, and the projection runs it again after the fan-out. An
+    ``explode`` of a projected column does the same: the optimizer infers
+    ``size(col) > 0`` from it. Rule: after ``ensure_parallelism``, filter
+    or explode only materialized columns — behind a ``localCheckpoint``,
+    which is a leaf no filter is pushed through (see the shingle sites in
+    ``extensions/dedup.py``)."""
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

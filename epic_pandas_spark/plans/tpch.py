@@ -1032,10 +1032,13 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-priority orders vs low.
 
     Plan shape this exists to exercise: the fact⋈fact equi-join
-    (lineitem⋈orders shuffle on orderkey, no broadcast side) feeding
-    CASE-WHEN CONDITIONAL AGGREGATION — the canonical one-pass pivot
-    where both output measures are branches of the same SUM, so adding
-    measures never adds scans or shuffles. The year filter pushes to the
+    (lineitem⋈orders on orderkey) feeding CASE-WHEN CONDITIONAL
+    AGGREGATION — the canonical one-pass pivot where both output
+    measures are branches of the same SUM, so adding measures never adds
+    scans or shuffles. The join is not a shuffle join: under the
+    session's 64 MB broadcast threshold (session.py) the executed plan
+    broadcasts the projected ``orders`` side (``BroadcastHashJoin …
+    BuildRight``, 1.5M rows at sf1). The year filter pushes to the
     lineitem parquet scan. Ref analog: none; shape from TPC-H spec
     Q12."""
     li = load_table(spark, sf_dir, "lineitem").filter(

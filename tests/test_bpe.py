@@ -79,6 +79,87 @@ def test_bpe_train_early_stop_and_validation(spark):
         bpe_train(df, "text", n_merges=0)
 
 
+def _train_by_recount(freq: dict, n_merges: int) -> list[tuple[str, str]]:
+    """Brute-force trainer: recount every pair of every word per merge."""
+    from collections import Counter
+
+    words = {w: list(w) for w in freq}
+    merges = []
+    for _ in range(n_merges):
+        stats: Counter = Counter()
+        for w, syms in words.items():
+            for pair in zip(syms, syms[1:]):
+                stats[pair] += freq[w]
+        if not stats:
+            break
+        best = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
+        if best[1] < 2:
+            break
+        merges.append(best[0])
+        words = {w: _merge_word(s, *best[0]) for w, s in words.items()}
+    return merges
+
+
+def test_train_on_freq_matches_brute_force_recount():
+    """The incremental pair counts give the same merge sequence, tie-break
+    included, as recounting everything: on seeded random corpora over tiny
+    alphabets (many ties, repeated and overlapping pairs like 'aaa') and
+    on the sf0.01 documents."""
+    import random
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from epic_pandas_spark.functions.bpe import _train_on_freq
+
+    for seed in range(200):
+        rng = random.Random(seed)
+        alphabet = "abcxyz"[: rng.randint(1, 6)]
+        freq = {
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 10))): rng.randint(1, 5)
+            for _ in range(rng.randint(1, 40))
+        }
+        n = rng.randint(1, 40)
+        assert _train_on_freq(freq, n) == _train_by_recount(freq, n), seed
+    texts = pq.read_table(
+        "/root/testdata/sf0.01/documents.parquet", columns=["text"]
+    ).column("text").to_pylist()
+    freq = dict(Counter(w for t in texts if t for w in t.lower().strip().split()))
+    want = _train_by_recount(freq, 60)
+    assert len(want) > 20
+    assert _train_on_freq(freq, 60) == want
+
+
+def test_bpe_encode_memo_matches_per_word_replay(spark, monkeypatch):
+    """The per-task word memo changes nothing: tokens equal a fresh replay
+    of the merges on every word, also with the memo bound at 1 so it is
+    cleared on nearly every new word."""
+    from epic_pandas_spark.functions import bpe
+
+    texts = [
+        "banana bandana banana", None, "", "   ", "\tan  ban\n nan ",
+        "Banana BAN an", "banana", "x", "nan nan nan bandana",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, text string")
+    merges = bpe_train(df.filter(F.col("text").isNotNull()), "text", n_merges=8)
+    assert merges
+
+    def replay(text):
+        toks = []
+        for word in (text or "").lower().split():
+            syms = list(word)
+            for a, b in merges:
+                syms = _merge_word(syms, a, b)
+            toks.extend(syms)
+        return toks
+
+    want = [replay(t) for t in texts]
+    for bound in (bpe._ENCODE_MEMO_MAX_WORDS, 1):
+        monkeypatch.setattr(bpe, "_ENCODE_MEMO_MAX_WORDS", bound)
+        got = bpe_encode(df.coalesce(1), "text", merges).orderBy("id").collect()
+        assert [list(r["tokens"]) for r in got] == want, bound
+
+
 # ---------------------------------------------------------------------------
 # unigram-LM (SentencePiece-style) tokenizer
 

@@ -1,6 +1,7 @@
 """Plan-shape contracts: assert the physical plans match the scale claims
 made in operator docstrings (not just that results are right)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from epic_pandas_spark.plans.inspect import (
@@ -301,3 +302,62 @@ def test_semantic_dedup_one_shuffle_codegen_assign(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert count_shuffles(out) == 1  # hashpartitioning(cluster) only
+
+
+def _filters_below_exchange(plan: str, marker: str) -> list[str]:
+    """Filter nodes whose condition contains ``marker`` that sit anywhere
+    under a round-robin ``Repartition`` in an optimized-plan tree string
+    (a descendant is every following line indented deeper)."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    bad = []
+    for i, line in enumerate(lines):
+        node = line.lstrip(" :+-")
+        if node.startswith("Repartition") or "RoundRobinPartitioning" in node:
+            for sub in lines[i + 1:]:
+                if depth(sub) <= depth(line):
+                    break
+                if sub.lstrip(" :+-").startswith("Filter") and marker in sub:
+                    bad.append(sub.strip()[:160])
+    return bad
+
+
+# shingle site -> its arguments after (df, text_col, id_col)
+_SHINGLE_SITES = {
+    "jaccard_pairs": (0.8,),
+    "jaccard_pairs_prefix": (0.8,),
+    "minhash_lsh_pairs": (0.8,),
+    "minhash_index": (),
+}
+
+
+@pytest.mark.parametrize("site", list(_SHINGLE_SITES))
+def test_shingle_filter_stays_above_exchange(spark, monkeypatch, site):
+    """ensure_parallelism fans a narrow scan out before the n-gram
+    expression. A deterministic filter on the n-gram column placed after
+    it is pushed below the exchange by the optimizer, so the expression
+    runs in the single scan task and again after the fan-out. Every plan
+    the operator materializes must keep such filters above the exchange."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from epic_pandas_spark.extensions import dedup
+
+    plans: list[str] = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", spy)
+    # one partition, so ensure_parallelism's exchange is always planned
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text").coalesce(1)
+    out = getattr(dedup, site)(docs, "text", "doc_id", *_SHINGLE_SITES[site])
+    for df in out if isinstance(out, tuple) else (out,):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+    assert any("Repartition" in p for p in plans), "no fan-out planned"
+    bad = [f for p in plans for f in _filters_below_exchange(p, "zip_with")]
+    assert not bad, bad
