@@ -7,8 +7,9 @@ Four families, each with an explicit 100 TB story:
             One shuffle on the 8-byte fingerprint, never on the text.
 - jaccard:  word-shingle set similarity via an inverted-index join
             (explode shingles → join on shingle → count common / union).
-            The classic pair-generation plan; a doc-frequency cap keeps
-            hot shingles from exploding the join at scale.
+            The classic pair-generation plan; the prefix-filtered variant
+            indexes only each doc's rarest shingles, so hot shingles
+            cannot explode the join at scale.
 - minhash:  k seeded xxhash64 min-signatures + banded LSH bucketing →
             candidate pairs → exact-jaccard verification. Signature
             computation is embarrassingly parallel (higher-order
@@ -142,48 +143,50 @@ def soft_dedup_weights(
     )
 
 
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, shingle_words: int) -> DataFrame:
+    """``(id, ws array<long>, n)``: each doc's word-shingle set as xxhash64
+    keys, and its size — the one shingle table every Jaccard and MinHash
+    operator here starts from. Shingles join and intersect as 8-byte
+    longs, never as strings (collision odds ~|shingles|²/2^64, immaterial;
+    the arrays stay sets since word_ngrams_expr already dedups per doc).
+
+    The table is ``localCheckpoint``-ed because every caller reads it at
+    least twice (both sides of a join, or candidates and verification).
+    ``eager=False`` does not make that lazy under adaptive execution: the
+    call plans its input and runs every shuffle map stage below it — here
+    the scan and ensure_parallelism's fan-out — before it returns; only
+    the shingling itself waits for the first action. Docs without
+    shingles are dropped AFTER the checkpoint, on the materialized ``n``:
+    a filter on the n-gram expression would be pushed below the fan-out
+    (see ensure_parallelism) and the expression would run twice."""
+    return (
+        ensure_parallelism(df).select(
+            F.col(id_col).alias("id"),
+            F.transform(
+                word_ngrams_expr(F.col(text_col), n=shingle_words),
+                lambda g: F.xxhash64(g),
+            ).alias("ws"),
+        )
+        .select("id", "ws", F.size("ws").alias("n"))
+        .localCheckpoint(eager=False)
+        .filter(F.col("n") > 0)
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
     threshold: float,
     shingle_words: int = 3,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """All (id_a < id_b) pairs with word-set Jaccard ≥ threshold, via the
-    inverted-index self-join.
-
-    ``max_doc_freq`` drops shingles appearing in more than that many docs
-    before the join — the standard guard against hot-token join blowup at
-    scale (a shingle in 1M docs would alone generate 10^12 pairs). Dropping
-    ubiquitous shingles changes scores slightly; leave None for exact
-    semantics on modest data.
-    """
-    # the self-join references the inverted index twice; a lazy local
-    # checkpoint materializes the shingle sets once instead of recomputing
-    # the shingle expressions on both branches (measured 8.2s -> 3.0s at
-    # 5k docs). It sits BEFORE the explode: the optimizer infers
-    # size(ws) > 0 from an explode and would push that filter, n-gram
-    # expression and all, below ensure_parallelism's exchange.
-    # Shingles join as 8-byte xxhash64 keys, never as strings — the
-    # shuffle carries fixed-width longs (collision odds ~|shingles|²/2^64,
-    # immaterial; the set semantics are unchanged since shingle arrays are
-    # already distinct per doc). Docs without shingles explode to nothing.
-    words = (
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("id"),
-            F.transform(
-                word_ngrams_expr(F.col(text_col), n=shingle_words),
-                lambda g: F.xxhash64(g),
-            ).alias("wh"),
-        )
-        .select("id", F.size("wh").alias("n"), "wh")
-        .localCheckpoint(eager=False)
+    inverted-index self-join over the hashed shingle sets."""
+    # the self-join reads the inverted index twice; the checkpointed
+    # shingle table is computed once (measured 8.2s -> 3.0s at 5k docs)
+    inv = _shingle_sets(df, text_col, id_col, shingle_words).select(
+        "id", "n", F.explode("ws").alias("w")
     )
-    inv = words.select("id", "n", F.explode("wh").alias("w"))
-    if max_doc_freq is not None:
-        dfreq = inv.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-        inv = inv.join(F.broadcast(dfreq.filter(F.col("df") <= max_doc_freq)), "w", "left_semi")
     a = inv.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"), F.col("w").alias("wa"))
     b = inv.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"), F.col("w").alias("wb"))
     # size-compatibility pruning (lossless): jaccard >= t forces
@@ -237,28 +240,14 @@ def jaccard_pairs_prefix(
 
     Why it wins at scale: the self-join index shrinks by ~t of its
     entries, and — because prefixes hold each doc's RAREST shingles —
-    hot-key join blowup collapses without the lossy ``max_doc_freq``
-    guard. The PPJoin positional filter (Xiao et al. WWW'08) then kills
-    candidates whose shared token sits too late in both docs to leave
-    room for the required overlap — before the pair-dedup shuffle, still
-    lossless. Costs one extra shuffle (df-rank window keyed on id).
-    Everything downstream of the shingle projection handles 8-byte
-    hashes only — shingle STRINGS never reach a shuffle, and candidate
-    verification intersects long arrays, not string arrays."""
-    words = (
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(
-                F.transform(
-                    word_ngrams_expr(F.col(text_col), n=shingle_words),
-                    lambda g: F.xxhash64(g),
-                )
-            ).alias("wh"),
-        )
-        .localCheckpoint(eager=False)  # reused by ranking AND verification
-        .filter(F.size("wh") > 0)  # materialized column: see ensure_parallelism
-    )
-    inv = words.select("id", F.size("wh").alias("n"), F.explode("wh").alias("w"))
+    hot-key join blowup collapses without dropping any shingle. The
+    PPJoin positional filter (Xiao et al. WWW'08) then kills candidates
+    whose shared token sits too late in both docs to leave room for the
+    required overlap — before the pair-dedup shuffle, still lossless.
+    Costs one extra shuffle (df-rank window keyed on id)."""
+    # reused by ranking AND verification
+    words = _shingle_sets(df, text_col, id_col, shingle_words)
+    inv = words.select("id", "n", F.explode("ws").alias("w"))
     # every ceil below carries a 1e-6 slack: t·n can ROUND ABOVE its exact
     # value in fp (0.55·100 = 55.000000000000007 → ceil 56, exact 55),
     # which silently shortens prefixes / tightens filters and drops
@@ -312,11 +301,11 @@ def jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    wa = words.select(F.col("id").alias("id_a"), F.col("wh").alias("wh_a"))
-    wb = words.select(F.col("id").alias("id_b"), F.col("wh").alias("wh_b"))
+    wa = words.select(F.col("id").alias("id_a"), F.col("ws").alias("ws_a"))
+    wb = words.select(F.col("id").alias("id_b"), F.col("ws").alias("ws_b"))
     verified = cand.join(wa, "id_a").join(wb, "id_b")
-    inter = F.size(F.array_intersect("wh_a", "wh_b"))
-    jac = inter.cast("double") / (F.size("wh_a") + F.size("wh_b") - inter)
+    inter = F.size(F.array_intersect("ws_a", "ws_b"))
+    jac = inter.cast("double") / (F.size("ws_a") + F.size("ws_b") - inter)
     return (
         verified.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= F.lit(threshold))
@@ -343,47 +332,6 @@ def minhash_signatures(words: DataFrame, n_hashes: int = 32, seed: int = 7) -> D
     return exploded.groupBy("id").agg(*aggs)
 
 
-def tune_lsh_bands(
-    threshold: float,
-    n_hashes: int = 32,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-) -> int:
-    """Pick the LSH band count minimizing the weighted false-positive +
-    false-negative mass of the S-curve — the standard optimal-parameter
-    search (Leskovec/Rajaraman/Ullman, *Mining of Massive Datasets*
-    §3.4.3; same criterion as datasketch's ``_optimal_param``).
-
-    For ``bands`` bands of ``r = n_hashes // bands`` rows, a pair with
-    true Jaccard ``s`` becomes a candidate with probability
-    ``1 - (1 - s^r)^bands``. FP mass = ∫₀ᵗ P(s) ds (work wasted
-    verifying sub-threshold pairs), FN mass = ∫ₜ¹ (1 - P(s)) ds (recall
-    lost BEFORE the exact-verification stage can save it). Every
-    divisor of n_hashes is scored by midpoint quadrature; ties break to
-    fewer bands (cheaper candidate join). Driver-side arithmetic over
-    ≤ n_hashes options — costs nothing at any scale."""
-    if not 0 < threshold < 1:
-        raise ValueError("threshold must be in (0, 1)")
-    steps = 1000
-    best_bands, best_err = None, None
-    for bands in range(1, n_hashes + 1):
-        if n_hashes % bands:
-            continue
-        r = n_hashes // bands
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** bands
-            if s < threshold:
-                fp += p / steps
-            else:
-                fn += (1.0 - p) / steps
-        err = fp_weight * fp + fn_weight * fn
-        if best_err is None or err < best_err - 1e-12:
-            best_bands, best_err = bands, err
-    return best_bands
-
-
 def bands_for_recall(
     threshold: float,
     n_hashes: int = 32,
@@ -395,7 +343,8 @@ def bands_for_recall(
     always verifies): false positives only cost verification work while
     false negatives are unrecoverable, so minimize candidate volume
     subject to a recall floor rather than balancing the two error
-    masses like :func:`tune_lsh_bands`. Fewer bands = longer rows =
+    masses (Leskovec/Rajaraman/Ullman, *Mining of Massive Datasets*
+    §3.4.3). Fewer bands = longer rows =
     steeper curve = fewer sub-threshold candidates, so the first
     divisor meeting the floor is also the precision-maximal one.
     Falls back to ``n_hashes`` bands (r=1: collision probability
@@ -423,96 +372,23 @@ def minhash_lsh_pairs(
     threshold: float,
     shingle_words: int = 3,
     n_hashes: int = 32,
-    bands: int | str = 16,
+    bands: int = 16,
     seed: int = 7,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified: band the signature into
     ``bands`` buckets of r = n_hashes/bands rows, join on (band, bucket
     hash) to get candidates, then verify candidates with EXACT word-set
-    Jaccard ≥ threshold.
+    Jaccard ≥ threshold. :func:`bands_for_recall` derives ``bands`` from
+    the threshold.
 
     Scale shape: candidate generation shuffles on the band hash (8 bytes ×
     bands per doc); verification touches only candidate pairs. Identical
     shingle sets always collide in every band, so recall at threshold→1.0
-    is exactly 1.
-
-    ``bands="auto"`` picks the band count from the threshold via
-    :func:`tune_lsh_bands` (S-curve FP+FN minimization) — high
-    thresholds get fewer, longer bands (cheap and precise), low
-    thresholds more, shorter ones (recall before verification).
-    ``bands="auto-recall"`` uses :func:`bands_for_recall` instead —
-    fewest bands with ≥99.9% collision probability at the threshold,
-    the right objective HERE because the exact-Jaccard verification
-    below makes false positives harmless."""
-    if bands == "auto":
-        bands = tune_lsh_bands(threshold, n_hashes)
-    elif bands == "auto-recall":
-        bands = bands_for_recall(threshold, n_hashes)
-    words, candidates = _lsh_words_and_candidates(
-        df, text_col, id_col, shingle_words, n_hashes, bands, seed
-    )
-    return _verify_jaccard(words, candidates, threshold)
-
-
-def _lsh_words_and_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_words: int,
-    n_hashes: int,
-    bands,
-    seed: int,
-) -> tuple:
-    """Shared candidate-generation pipeline of :func:`minhash_lsh_pairs`
-    and its instrumentation twin: returns (words, candidates) where
-    ``words`` is the checkpointed (id, shingle-set) table and
-    ``candidates`` the distinct banded pair set pre-verification.
-    ``bands`` must already be resolved to an int (callers handle the
-    "auto"/"auto-recall" modes, which need the threshold)."""
-    if n_hashes % bands != 0:
-        raise ValueError("bands must divide n_hashes")
-    r = n_hashes // bands
-    words = (
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("id"),
-            word_ngrams_expr(F.col(text_col), n=shingle_words).alias("ws"),
-        )
-        .localCheckpoint(eager=False)  # reused by banding AND verification
-        .filter(F.size("ws") > 0)  # materialized column: see ensure_parallelism
-    )
-    signed = minhash_signatures(words, n_hashes=n_hashes, seed=seed)
-    banded = signed.select(
-        "id",
-        F.posexplode(
-            F.array(*[F.xxhash64(*[F.col(f"s{b * r + j}") for j in range(r)]) for b in range(bands)])
-        ).alias("band", "bucket"),
-    ).localCheckpoint(eager=False)  # both sides of the candidate self-join
-    # candidates shuffle only (band, bucket, id) triples — never the shingles
-    lhs = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-    rhs = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-    candidates = (
-        lhs.join(rhs, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return words, candidates
-
-
-def _verify_jaccard(words: DataFrame, candidates: DataFrame, threshold: float) -> DataFrame:
-    """Exact word-set Jaccard verification over candidate pairs — joins the
-    shingle arrays back onto the (id_a, id_b) pair set."""
-    wa = words.select(F.col("id").alias("id_a"), F.col("ws").alias("ws_a"))
-    wb = words.select(F.col("id").alias("id_b"), F.col("ws").alias("ws_b"))
-    verified = candidates.join(wa, "id_a").join(wb, "id_b")
-    inter = F.size(F.array_intersect("ws_a", "ws_b"))
-    union = F.size(F.array_union("ws_a", "ws_b"))
-    jac = inter.cast("double") / union
-    return (
-        verified.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
+    is exactly 1. This is :func:`minhash_lsh_pairs_incremental` with no
+    standing index: the batch is paired against itself only."""
+    return minhash_lsh_pairs_incremental(
+        df, text_col, id_col, threshold, None, shingle_words, n_hashes, bands, seed
+    )[0]
 
 
 def minhash_lsh_candidate_stats(
@@ -522,11 +398,11 @@ def minhash_lsh_candidate_stats(
     threshold: float,
     shingle_words: int = 3,
     n_hashes: int = 32,
-    bands: int | str = 16,
+    bands: int = 16,
     seed: int = 7,
 ) -> dict:
     """Instrumentation twin of :func:`minhash_lsh_pairs` (the LSH analog of
-    :func:`edit_distance_candidate_stats`): one pass over the same shared
+    :func:`edit_distance_candidate_stats`): one pass over the same
     pipeline returning ``{"n_rows", "n_docs", "n_bands", "n_band_rows",
     "n_candidate_pairs", "n_verified_pairs"}`` — candidate count is the
     distinct banded pair set the verification stage pays for, verified
@@ -534,25 +410,21 @@ def minhash_lsh_candidate_stats(
     artifacts attribute superlinear wall growth to duplicate-pair density
     in-data (pairs can legitimately grow faster than rows in a corpus
     whose duplicate clusters grow with it) instead of arguing about it."""
-    if bands == "auto":
-        bands = tune_lsh_bands(threshold, n_hashes)
-    elif bands == "auto-recall":
-        bands = bands_for_recall(threshold, n_hashes)
     n_rows = df.count()
-    words, candidates = _lsh_words_and_candidates(
+    banded, words = minhash_index(
         df, text_col, id_col, shingle_words, n_hashes, bands, seed
     )
-    candidates = candidates.localCheckpoint(eager=False)  # counted AND verified
+    candidates = _lsh_candidates(
+        banded.localCheckpoint(eager=False), None
+    ).localCheckpoint(eager=False)  # counted AND verified
     n_docs = words.count()
-    n_cands = candidates.count()
-    n_verified = _verify_jaccard(words, candidates, threshold).count()
     return {
         "n_rows": n_rows,
         "n_docs": n_docs,
-        "n_bands": int(bands),
-        "n_band_rows": n_docs * int(bands),
-        "n_candidate_pairs": n_cands,
-        "n_verified_pairs": n_verified,
+        "n_bands": bands,
+        "n_band_rows": n_docs * bands,
+        "n_candidate_pairs": candidates.count(),
+        "n_verified_pairs": _verify_candidates(candidates, words, None, threshold).count(),
     }
 
 
@@ -766,8 +638,10 @@ def connected_components(
     RuntimeWarning instead."""
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError("on_nonconverged must be 'raise' or 'warn'")
-    # lazy checkpoint: the gate's job materializes it, and min-label
-    # re-reads it instead of recomputing the pair plan
+    # checkpoint: the pair plan's shuffle map stages run at this call
+    # (eager=False still plans the input under adaptive execution), the
+    # gate's job materializes the rest, and min-label re-reads it instead
+    # of recomputing the pair plan
     pairs = pairs.select(id_a, id_b).localCheckpoint(eager=False)
     rows = collect_at_most(pairs, _CC_DRIVER_MAX_EDGES)
     if rows is not None and not any(x is None or x != x for r in rows for x in r):
@@ -948,19 +822,8 @@ def minhash_index(
     near-dedup feasible without re-reading the corpus."""
     if n_hashes % bands != 0:
         raise ValueError("bands must divide n_hashes")
-    words = (
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("id"),
-            word_ngrams_expr(F.col(text_col), n=shingle_words).alias("ws"),
-        )
-        .select(
-            "id",
-            F.transform("ws", lambda s: F.xxhash64(s)).alias("ws"),
-        )
-        .select("id", "ws", F.size("ws").alias("n"))
-        .localCheckpoint(eager=False)  # feeds both signatures and the store
-        .filter(F.col("n") > 0)  # materialized column: see ensure_parallelism
-    )
+    # feeds both the signatures and the store
+    words = _shingle_sets(df, text_col, id_col, shingle_words)
     r = n_hashes // bands
     signed = minhash_signatures(
         words.select("id", "ws"), n_hashes=n_hashes, seed=seed
@@ -979,18 +842,13 @@ def minhash_index(
     return banded, words
 
 
-def _lsh_pairs_vs_store(
-    new_bands: DataFrame,
-    new_words: DataFrame,
-    index: tuple[DataFrame, DataFrame] | None,
-    threshold: float,
+def _lsh_candidates(
+    new_bands: DataFrame, index: tuple[DataFrame, DataFrame] | None
 ) -> DataFrame:
-    """Shared candidate-generation + exact-verification core of the
-    incremental/streaming near-dup family: band-collision candidates
-    (new-vs-new and, when ``index`` is given, new-vs-store), then exact
-    Jaccard over the hashed shingle sets of candidate ids only. Returns
-    verified ``(id_a, id_b, jaccard)`` pairs at ``jaccard >=
-    threshold``."""
+    """Distinct ``(id_a, id_b)`` band-collision candidates: new-vs-new
+    with ``id_a < id_b`` and, when ``index`` is given, new-vs-store with
+    the new doc as ``id_a``. Only (band, bucket, id) triples shuffle,
+    never the shingles."""
     lhs = new_bands.select(F.col("id").alias("id_a"), "band", "bucket")
     rhs = new_bands.select(F.col("id").alias("id_b"), "band", "bucket")
     cand = (
@@ -998,23 +856,27 @@ def _lsh_pairs_vs_store(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    all_words = new_words
     if index is not None:
-        store_bands, store_words = index
-        old = store_bands.select(F.col("id").alias("id_b"), "band", "bucket")
-        cross = (
-            new_bands.select(F.col("id").alias("id_a"), "band", "bucket")
-            .join(old, on=["band", "bucket"])
-            .select("id_a", "id_b")
-        )
+        old = index[0].select(F.col("id").alias("id_b"), "band", "bucket")
+        cross = lhs.join(old, on=["band", "bucket"]).select("id_a", "id_b")
         cand = cand.unionByName(cross)
-        all_words = new_words.unionByName(store_words)
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-    # id_a is ALWAYS from the new batch (new-vs-new keeps both sides new;
-    # the cross join aliases new as id_a, store as id_b), so the id_a
+    return cand.dropDuplicates(["id_a", "id_b"])
+
+
+def _verify_candidates(
+    cand: DataFrame,
+    new_words: DataFrame,
+    index: tuple[DataFrame, DataFrame] | None,
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard over the hashed shingle sets of candidate ids only.
+    Returns verified ``(id_a, id_b, jaccard)`` pairs at ``jaccard >=
+    threshold``."""
+    # id_a is ALWAYS from the new batch (see _lsh_candidates), so the id_a
     # word dimension never needs the store union — per epoch that join
     # touches |batch| word sets instead of |store|, which is what keeps
     # the per-micro-batch probe cost O(batch), not O(corpus)
+    all_words = new_words if index is None else new_words.unionByName(index[1])
     wa = new_words.select(F.col("id").alias("id_a"), F.col("ws").alias("ws_a"))
     wb = all_words.select(F.col("id").alias("id_b"), F.col("ws").alias("ws_b"))
     verified = cand.join(wa, "id_a").join(wb, "id_b")
@@ -1026,6 +888,19 @@ def _lsh_pairs_vs_store(
         verified.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _lsh_pairs_vs_store(
+    new_bands: DataFrame,
+    new_words: DataFrame,
+    index: tuple[DataFrame, DataFrame] | None,
+    threshold: float,
+) -> DataFrame:
+    """Shared core of the batch, incremental and streaming near-dup
+    family: band-collision candidates, then exact verification."""
+    return _verify_candidates(
+        _lsh_candidates(new_bands, index), new_words, index, threshold
     )
 
 
@@ -1213,7 +1088,7 @@ def minhash_neardup_stream(
             )
         pairs = _lsh_pairs_vs_store(nb, nw, prior, threshold)
         # the pairs write runs FIRST as one fused job — it materializes
-        # the batch's lazy nb/nw checkpoints on the way — and the two
+        # the final stages of the nb/nw checkpoints on the way — and the two
         # index appends then run CONCURRENTLY over the materialized
         # checkpoint blocks (Spark schedules jobs from separate threads
         # in parallel), so the epoch pays one fused probe + max(append)

@@ -100,8 +100,10 @@ def bpe_train(
 
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    # lazy checkpoint: the gate's job materializes it, so the fall-through
-    # to the distributed loop reuses it instead of rescanning the corpus
+    # checkpoint: the word-count shuffle's map stage runs at this call
+    # (eager=False still plans the input under adaptive execution), the
+    # gate's job materializes the rest, and the fall-through to the
+    # distributed loop reuses it instead of rescanning the corpus
     freq_df = _word_freq_table(df, text_col).localCheckpoint(eager=False)
     rows = collect_at_most(freq_df, _BPE_LOCAL_MAX_WORDS)
     if rows is not None:

@@ -98,7 +98,8 @@ def _seed_vocab(words: DataFrame, max_piece_len: int, seed_size: int) -> list:
         .select(F.substring("w", F.col("p"), F.col("l")).alias("piece"), "cnt", "l")
         .groupBy("piece")
         .agg(F.sum(F.col("cnt") * F.col("l")).alias("score"))
-        # materialize once (lazily, on the first collect): the top-N and
+        # materialize once (the grouped sum's map stage runs at the
+        # checkpoint call, the rest on the first collect): the top-N and
         # the single-char collects would otherwise EACH re-run the
         # positions x lengths double-explode + grouped sum over the
         # distinct-word table. The checkpointed state is the (piece,
@@ -325,8 +326,10 @@ def unigram_train(
     if em_rounds_per_prune < 1:
         raise ValueError("em_rounds_per_prune must be >= 1")
 
-    # lazy checkpoint: the seeding collects materialize it once; the gate
-    # and the distributed E-steps reuse it
+    # checkpoint: the word-count shuffle's map stage runs at this call
+    # (eager=False still plans the input under adaptive execution), the
+    # seeding collects materialize the rest once; the gate and the
+    # distributed E-steps reuse it
     freq_df = _word_freq_table(df, text_col).localCheckpoint(eager=False)
     seed = _seed_vocab(freq_df, max_piece_len, seed_size=vocab_size * seed_multiplier)
     # init: uniform over the seed

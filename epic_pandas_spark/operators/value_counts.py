@@ -49,8 +49,9 @@ def value_counts(
         src = src.filter(F.col("value").isNotNull())
     counts = src.groupBy("value").agg(F.count(F.lit(1)).alias("count"))
     if total:
-        # the TOTAL branch references counts twice; a lazy local checkpoint
+        # the TOTAL branch references counts twice; a local checkpoint
         # materializes the (tiny) histogram once instead of re-scanning
+        # (its shuffle map stage runs at this call, not at the action)
         counts = counts.localCheckpoint(eager=False)
     out = _with_fraction(counts)
     if total:

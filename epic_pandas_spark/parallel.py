@@ -116,8 +116,12 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 def collect_at_most(df: DataFrame, n: int) -> list | None:
     """The driver-tier gate: ``df``'s rows when there are at most ``n``,
     else ``None`` — one bounded ``limit(n + 1)`` job in place of a
-    ``count()`` followed by a ``collect()``. Callers pass a (lazily)
-    ``localCheckpoint``-ed frame, so the job that probes the size also
-    materializes the input the distributed tier falls back to."""
+    ``count()`` followed by a ``collect()``. Callers pass a
+    ``localCheckpoint(eager=False)``-ed frame, so the job that probes the
+    size also materializes the input the distributed tier falls back to.
+    That checkpoint is not wholly lazy under adaptive execution: the
+    ``localCheckpoint`` call itself plans its input and runs every
+    shuffle map stage below it; only the final stage waits for this
+    gate's job."""
     rows = df.limit(n + 1).collect()
     return rows if len(rows) <= n else None

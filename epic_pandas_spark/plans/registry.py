@@ -1045,15 +1045,20 @@ def q_near_dedup_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics in DuckDB with exact all-pairs Jaccard and a recursive-CTE
     transitive closure — so the approximate candidate generation is held
     to the exact answer end-to-end, not just per stage. The band count
-    is DERIVED from the threshold (bands="auto-recall": fewest bands
-    with ≥99.9% S-curve collision at τ — which resolves to the 16 the
+    is DERIVED from the threshold (bands_for_recall: fewest bands with
+    ≥99.9% S-curve collision at τ — which resolves to the 16 the
     pipeline previously hand-pinned), so changing τ re-tunes the
     candidate join instead of silently degrading recall."""
-    from epic_pandas_spark.extensions.dedup import connected_components, minhash_lsh_pairs
+    from epic_pandas_spark.extensions.dedup import (
+        bands_for_recall,
+        connected_components,
+        minhash_lsh_pairs,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
+        docs, "text", "doc_id", threshold=0.8, n_hashes=32,
+        bands=bands_for_recall(0.8, 32),
     )
     # one bounded collect picks the tier: driver union-find up to 100k
     # edges — min-label's per-round job latency dominates tiny graphs —
@@ -5344,6 +5349,7 @@ def q_ccnet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         resample_mixture_tokens,
     )
     from epic_pandas_spark.extensions.dedup import (
+        bands_for_recall,
         connected_components,
         keep_best_per_cluster,
         minhash_lsh_pairs,
@@ -5387,7 +5393,8 @@ def q_ccnet_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage 3: near-dedup keep-best (highest classifier score per cluster)
     pairs = minhash_lsh_pairs(
-        k2, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
+        k2, "text", "doc_id", threshold=0.8, n_hashes=32,
+        bands=bands_for_recall(0.8, 32),
     )
     clusters = connected_components(pairs).select(
         F.col("id").alias("doc_id"), "cluster"
@@ -5556,7 +5563,7 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_lsh: rarest-first prefixes shrink the candidate join
     to ~(1-τ) of the index with zero recall loss, then exact-set
     verification. The plan of record for exact near-dup at 100 TB (no
-    lossy max_doc_freq guard needed)."""
+    shingle is dropped to bound hot-key joins)."""
     from epic_pandas_spark.extensions.dedup import jaccard_pairs_prefix
 
     docs = load_table(spark, sf_dir, "documents")

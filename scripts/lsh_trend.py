@@ -5,8 +5,8 @@ candidate/verified pair counts from `minhash_lsh_candidate_stats`, so
 the superlinear last-decade wall ratios observed at sf100 in round 8
 (11.8x / 14.6x on the 10x into sf100) are attributable to duplicate-pair
 density in the synthetic corpus vs a plan regression. Both queries use
-the same LSH parameters (tau=0.8, 32 hashes, 16 bands — "auto-recall"
-resolves to 16), so one stats pass attributes both.
+the same LSH parameters (tau=0.8, 32 hashes, 16 bands —
+bands_for_recall(0.8, 32) is 16), so one stats pass attributes both.
 
 Usage: python scripts/lsh_trend.py [--tiers sf0.01,sf0.1,...] > SCALE_TREND_R9_LSH.json
 """

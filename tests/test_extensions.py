@@ -715,6 +715,7 @@ def test_minhash_lsh_candidate_stats(spark):
     scale-trend artifacts can attribute wall growth to candidate density
     measured by the very pipeline they time."""
     from epic_pandas_spark.extensions.dedup import (
+        bands_for_recall,
         minhash_lsh_candidate_stats,
         minhash_lsh_pairs,
     )
@@ -740,9 +741,10 @@ def test_minhash_lsh_candidate_stats(spark):
     # the identical cluster alone gives C(4,2)=6 verified pairs
     assert stats["n_verified_pairs"] >= 6
 
-    # auto-recall band resolution is recorded in the stats
+    # the recall-floored band count is recorded in the stats
     stats_auto = minhash_lsh_candidate_stats(
-        df, "text", "doc_id", threshold=0.8, n_hashes=32, bands="auto-recall"
+        df, "text", "doc_id", threshold=0.8, n_hashes=32,
+        bands=bands_for_recall(0.8, 32),
     )
     assert stats_auto["n_bands"] == 16  # bands_for_recall(0.8, 32) == 16
 
@@ -1415,69 +1417,6 @@ def test_remove_repeated_spans_prefilter_parity(spark, monkeypatch):
     }
     assert dup_docs <= cand[8] and dup_docs <= cand[100], "false negative"
     assert len(cand[8]) < len(rows), "prefilter pruned nothing on a mostly-unique corpus"
-
-
-def test_tune_lsh_bands_scurve_properties():
-    """JVM-free: the chosen band count must fall monotonically with the
-    threshold (high threshold -> longer bands), beat its divisor
-    neighbors on the weighted S-curve error, and reject bad input."""
-    from epic_pandas_spark.extensions.dedup import tune_lsh_bands
-
-    picks = [tune_lsh_bands(t, 32) for t in (0.3, 0.5, 0.7, 0.9, 0.95)]
-    assert picks == sorted(picks, reverse=True)
-    assert picks[0] > picks[-1]
-
-    def err(bands, t, n=32, steps=2000):
-        r = n // bands
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** bands
-            if s < t:
-                fp += p / steps
-            else:
-                fn += (1.0 - p) / steps
-        return 0.5 * (fp + fn)
-
-    for t in (0.5, 0.8):
-        b = tune_lsh_bands(t, 32)
-        for other in (1, 2, 4, 8, 16, 32):
-            assert err(b, t) <= err(other, t) + 1e-9
-
-    with pytest.raises(ValueError):
-        tune_lsh_bands(0.0)
-    with pytest.raises(ValueError):
-        tune_lsh_bands(1.5)
-
-
-def test_minhash_auto_bands_matches_explicit(spark):
-    """bands="auto" is a parameter pick, not a semantics change: at the
-    same resolved band count the pair set is identical, and the verified
-    output still contains exactly the planted duplicate pairs."""
-    from epic_pandas_spark.extensions.dedup import minhash_lsh_pairs, tune_lsh_bands
-
-    base = [
-        "the quick brown fox jumps over the lazy dog near the river bank",
-        "pack my box with five dozen liquor jugs before noon arrives",
-        "sphinx of black quartz judge my vow said the old librarian",
-    ]
-    rows = []
-    for i, t in enumerate(base):
-        rows.append((i, t))
-        rows.append((100 + i, t))  # exact duplicate -> jaccard 1.0
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    t = 0.8
-    resolved = tune_lsh_bands(t, 32)
-    auto = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(df, "text", "doc_id", t, bands="auto").collect()
-    }
-    explicit = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(df, "text", "doc_id", t, bands=resolved).collect()
-    }
-    assert auto == explicit
-    assert {(i, 100 + i) for i in range(3)} <= auto
 
 
 def test_lsh_multiprobe_recall_never_worse(spark):

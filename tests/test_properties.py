@@ -248,15 +248,20 @@ def test_repetition_stats_match_python_reference(spark):
 def test_jaccard_plans_match_bruteforce_reference(spark):
     """Both EXACT Jaccard plans (inverted-index and AllPairs/PPJoin) vs a
     brute-force Python reference on a seeded high-collision corpus — a
-    6-word vocabulary packs many pairs near every threshold, the regime
-    where the fp-boundary regression lived. The reference mirrors the
+    6-word vocabulary plus near-copies of each doc put pairs on and just
+    below every threshold, the regime where the fp-boundary regression
+    lived. The reference mirrors the
     engine's arithmetic (double intersection/union ratio compared to the
-    double threshold) so only PRUNING differences can fail it."""
+    double threshold) so only PRUNING differences can fail it. MinHash-LSH
+    joins at t=0.8, where 16 bands of 2 rows collide with probability
+    1 - 0.36^16 at the threshold: its verification over hashed shingle
+    sets must give the string reference's pairs and scores exactly."""
     import random
 
     from epic_pandas_spark.extensions.dedup import (
         jaccard_pairs,
         jaccard_pairs_prefix,
+        minhash_lsh_pairs,
     )
 
     rng = random.Random(7)
@@ -265,6 +270,12 @@ def test_jaccard_plans_match_bruteforce_reference(spark):
         (i, " ".join(rng.choices(vocab, k=rng.randint(3, 14))))
         for i in range(40)
     ]
+    # the independent draws alone give no pair at these thresholds, so each
+    # doc also gets a copy with its last word dropped and one with a word
+    # appended: |s|-1 of |s| and |s| of |s|+1 shingles shared, which puts
+    # pairs on every threshold (4/5 = 0.8 exactly) and just below it
+    docs += [(100 + i, t.rsplit(" ", 1)[0]) for i, t in docs]
+    docs += [(200 + i, f"{t} {rng.choice(vocab)}") for i, t in docs[:40]]
 
     def shingles(text, n=3):
         words = text.split()
@@ -290,5 +301,12 @@ def test_jaccard_plans_match_bruteforce_reference(spark):
             (r["id_a"], r["id_b"], round(r["jaccard"], 9))
             for r in jaccard_pairs_prefix(df, "text", "doc_id", threshold=t).collect()
         }
+        assert len(expected) >= 20, f"too few reference pairs at t={t}"
         assert naive == expected, f"naive t={t}"
         assert pref == expected, f"prefix t={t}"
+        if t == 0.8:
+            lsh = {
+                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+                for r in minhash_lsh_pairs(df, "text", "doc_id", threshold=t).collect()
+            }
+            assert lsh == expected, f"minhash_lsh t={t}"
