@@ -31,7 +31,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from epic_pandas_spark.functions.text import word_ngrams_expr
+from epic_pandas_spark.functions.text import word_ngrams_expr, words_expr
 from epic_pandas_spark.operators.sampling import (
     _rand_col,
     allocate_counts,
@@ -55,12 +55,6 @@ __all__ = [
     "dsir_importance_weights",
     "dsir_select",
 ]
-
-
-def _norm_words(text: Column) -> Column:
-    """Lower/trim/collapse-whitespace word array — the same normalization
-    `word_ngrams_expr` applies, so 1-gram and n-gram streams agree."""
-    return F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " ")
 
 
 def ngram_hash_stream(
@@ -144,7 +138,7 @@ def repetition_stats(
     streams = []
     for n in ns:
         grams = (
-            _norm_words(F.col(text_col))
+            words_expr(F.col(text_col))
             if n == 1
             else word_ngrams_expr(F.col(text_col), n=n, distinct=False)
         )
@@ -511,6 +505,33 @@ def bucket_by_group_quantiles(
     )
 
 
+def _bucket(token: Column, n_buckets: int, bucket_expr) -> Column:
+    """Feature bucket of a token or gram: ``bucket_expr`` when given,
+    else ``xxhash64 % n_buckets``."""
+    if bucket_expr is None:
+        return F.pmod(F.xxhash64(token), F.lit(n_buckets))
+    return bucket_expr(token)
+
+
+def _hashed_token_stream(
+    df: DataFrame,
+    text_col: str,
+    keep: dict[str, Column],
+    n_buckets: int,
+    bucket_expr,
+    bucket_col: str = "bucket",
+) -> DataFrame:
+    """``(*keep, bucket_col)``: one row per non-empty word of each doc,
+    hashed to its feature bucket — the token stream the quality
+    classifier trains and scores on. ``keep`` maps output names to the
+    columns carried beside each token."""
+    toks = df.select(
+        *keep.values(), F.explode(words_expr(F.col(text_col))).alias("__tok")
+    ).filter(F.col("__tok") != "")
+    bucket = _bucket(F.col("__tok"), n_buckets, bucket_expr)
+    return toks.select(*keep, bucket.alias(bucket_col))
+
+
 def hashed_feature_scores(
     df: DataFrame,
     text_col: str,
@@ -536,17 +557,9 @@ def hashed_feature_scores(
     ``xxhash64 % n_buckets`` — e.g. an arithmetic hash expressible in the
     SQL oracle, or a trained model's own hashing scheme.
     Returns ``(id_col, score)`` with score in (0, 1)."""
-    toks = df.select(
-        F.col(id_col),
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        ).alias("__tok"),
-    ).filter(F.col("__tok") != "")
-    if bucket_expr is None:
-        bucket = F.pmod(F.xxhash64("__tok"), F.lit(n_buckets))
-    else:
-        bucket = bucket_expr(F.col("__tok"))
-    bucketed = toks.select(id_col, bucket.alias(bucket_col))
+    bucketed = _hashed_token_stream(
+        df, text_col, {id_col: F.col(id_col)}, n_buckets, bucket_expr, bucket_col
+    )
     wtab = weights.select(F.col(bucket_col), F.col(weight_col).alias("__w"))
     z = (
         bucketed.join(F.broadcast(wtab), on=bucket_col, how="left")
@@ -618,20 +631,18 @@ def train_quality_classifier(
         raise ValueError("lr must be > 0")
     spark = df.sparkSession
 
-    toks = df.filter(F.col(label_col).isNotNull()).select(
-        F.col(id_col).alias("__did"),
-        F.col(label_col).cast("double").alias("__y"),
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        ).alias("__tok"),
-    ).filter(F.col("__tok") != "")
-    if bucket_expr is None:
-        bucket = F.pmod(F.xxhash64("__tok"), F.lit(n_buckets))
-    else:
-        bucket = bucket_expr(F.col("__tok"))
+    toks = _hashed_token_stream(
+        df.filter(F.col(label_col).isNotNull()),
+        text_col,
+        {
+            "__did": F.col(id_col).alias("__did"),
+            "__y": F.col(label_col).cast("double").alias("__y"),
+        },
+        n_buckets,
+        bucket_expr,
+    )
     cnt = (
-        toks.select("__did", "__y", bucket.alias("bucket"))
-        .groupBy("__did", "__y", "bucket")
+        toks.groupBy("__did", "__y", "bucket")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
     # per-doc token totals over the bucket-collapsed table (far smaller
@@ -760,17 +771,9 @@ def score_stream_with_classifier(
     with an explicit sum/count (streaming aggregates need the raw
     accumulators, and F.avg is exactly sum/count anyway); this wrapper
     documents the contract and anchors the stream==batch test."""
-    toks = stream_df.select(
-        F.col(id_col),
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        ).alias("__tok"),
-    ).filter(F.col("__tok") != "")
-    if bucket_expr is None:
-        bucket = F.pmod(F.xxhash64("__tok"), F.lit(n_buckets))
-    else:
-        bucket = bucket_expr(F.col("__tok"))
-    bucketed = toks.select(id_col, bucket.alias("bucket"))
+    bucketed = _hashed_token_stream(
+        stream_df, text_col, {id_col: F.col(id_col)}, n_buckets, bucket_expr
+    )
     wtab = weights.select(F.col("bucket"), F.col("w").alias("__w"))
     z = (
         bucketed.join(F.broadcast(wtab), on="bucket", how="left")
@@ -1130,7 +1133,7 @@ def hashed_gram_stream(
     ``bucket_expr`` (gram Column -> bucket Column) overrides the default
     ``xxhash64 % n_buckets`` — e.g. the md5-arithmetic hash the SQL
     oracle can reproduce."""
-    w = F.filter(_norm_words(F.col(text_col)), lambda x: x != "")
+    w = F.filter(words_expr(F.col(text_col)), lambda x: x != "")
     pair_len = F.greatest(F.size(w) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(w, F.lit(1), pair_len),
@@ -1140,11 +1143,10 @@ def hashed_gram_stream(
     grams = F.concat(w, bigrams)
     cols = [F.col(id_col)] if id_col else []
     out = df.select(*cols, F.explode(grams).alias("__gram"))
-    if bucket_expr is None:
-        bucket = F.pmod(F.xxhash64("__gram"), F.lit(n_buckets))
-    else:
-        bucket = bucket_expr(F.col("__gram"))
-    return out.select(*([id_col] if id_col else []), bucket.alias("bucket"))
+    return out.select(
+        *([id_col] if id_col else []),
+        _bucket(F.col("__gram"), n_buckets, bucket_expr).alias("bucket"),
+    )
 
 
 def md5_bucket_expr(n_buckets: int):

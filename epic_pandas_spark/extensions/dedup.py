@@ -28,7 +28,12 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from epic_pandas_spark.functions.text import fingerprint_expr, word_ngrams_expr
+from epic_pandas_spark.functions.text import (
+    chargram_text_expr,
+    fingerprint_expr,
+    word_ngrams_expr,
+    words_expr,
+)
 from epic_pandas_spark.parallel import collect_at_most, ensure_parallelism
 
 
@@ -432,7 +437,7 @@ def simhash_expr(text: Column, n_bits: int = 64) -> Column:
     """SimHash: per-token xxhash64, then per-bit weighted majority over the
     token bag, reassembled into one long. 64 conditional-sum aggregates over
     the token array — heavy expression, but single-pass, no shuffle, no UDF."""
-    tokens = F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " ")
+    tokens = words_expr(text)
     hashes = F.transform(tokens, lambda t: F.xxhash64(t))
     one = F.lit(1).cast("long")
 
@@ -473,9 +478,7 @@ def simhash_table(
     hash_fn = token_hash if token_hash is not None else F.xxhash64
     tokens = ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        ).alias("t"),
+        F.explode(words_expr(F.col(text_col))).alias("t"),
     ).withColumn("h", hash_fn(F.col("t")))
     one = F.lit(1).cast("long")
     votes = tokens.groupBy("id").agg(
@@ -1045,8 +1048,9 @@ def minhash_neardup_stream(
         nb, nw = minhash_index(
             batch_df, text_col, id_col, shingle_words, n_hashes, bands, seed
         )
-        nb = nb.localCheckpoint(eager=False)  # pairs probe + index append
-        nw = nw.localCheckpoint(eager=False)
+        # pairs probe + index append; nw is minhash_index's checkpointed
+        # shingle table already
+        nb = nb.localCheckpoint(eager=False)
         # Refresh the snapshot from parquet once the in-memory epoch cache
         # is full (update_index=True: those epochs' appends are durable, so
         # the fresh snapshot covers them) OR once enough epochs have
@@ -1088,11 +1092,11 @@ def minhash_neardup_stream(
             )
         pairs = _lsh_pairs_vs_store(nb, nw, prior, threshold)
         # the pairs write runs FIRST as one fused job — it materializes
-        # the final stages of the nb/nw checkpoints on the way — and the two
-        # index appends then run CONCURRENTLY over the materialized
-        # checkpoint blocks (Spark schedules jobs from separate threads
-        # in parallel), so the epoch pays one fused probe + max(append)
-        # instead of four serial jobs
+        # the nb checkpoint and the shingle-table checkpoint under nw on
+        # the way — and the two index appends then run CONCURRENTLY over
+        # the materialized checkpoint blocks (Spark schedules jobs from
+        # separate threads in parallel), so the epoch pays one fused
+        # probe + max(append) instead of four serial jobs
         pairs.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
         if update_index:
             appends = [
@@ -1121,19 +1125,9 @@ def minhash_neardup_stream(
     )
 
 
-def _normalized_text_expr(text: Column) -> Column:
-    """Whitespace/case normalization for char-gram operators. Callers
-    MUST materialize this as its own projection (withColumn/select)
-    BEFORE feeding it to _gram_hashes_expr: an expression referenced
-    from inside a higher-order-function lambda is re-evaluated per
-    array element, so inlining the regex here costs O(len) regex passes
-    per doc (measured 7x wall-time on the sf0.1 corpus)."""
-    return F.regexp_replace(F.lower(text), r"\s+", " ")
-
-
 def _gram_hashes_expr(norm_text: Column, k: int) -> Column:
     """Array of xxhash64 values of the character k-grams of an
-    ALREADY-normalized text column (see _normalized_text_expr), one per
+    ALREADY-normalized text column (see chargram_text_expr), one per
     start position (a short text hashes as a single whole-string gram).
     The k-char gram strings exist only transiently inside expression
     evaluation — the produced column is ``array<bigint>``."""
@@ -1175,7 +1169,7 @@ def winnowed_fingerprints(
         raise ValueError("window must be >= 1")
     pos = ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
-        _normalized_text_expr(F.col(text_col)).alias("__t"),
+        chargram_text_expr(F.col(text_col)).alias("__t"),
     ).select(
         "id", F.posexplode(_gram_hashes_expr(F.col("__t"), k)).alias("pos", "h")
     )
@@ -1285,7 +1279,7 @@ def repeated_passage_pairs(
     key, which no plan survives at corpus scale."""
     inv = ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
-        _normalized_text_expr(F.col(text_col)).alias("__t"),
+        chargram_text_expr(F.col(text_col)).alias("__t"),
     ).select(
         "id",
         F.explode(F.array_distinct(_gram_hashes_expr(F.col("__t"), min_len))).alias(
@@ -1685,7 +1679,7 @@ def remove_repeated_spans(
     k = min_len
     docs_n = df.select(
         F.col(id_col).alias("__id"),
-        _normalized_text_expr(F.col(text_col)).alias("__t"),
+        chargram_text_expr(F.col(text_col)).alias("__t"),
     ).withColumn("__len", F.length("__t"))
 
     # phase-1 winnowing prefilter (lossless — see _winnow_candidate_ids):

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from epic_pandas_spark.functions.text import words_expr
+
 
 def bm25_topk(
     df: DataFrame,
@@ -33,9 +35,7 @@ def bm25_topk(
     ascending id — fully deterministic output."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    words = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
+    words = words_expr(F.col(text_col))
     base = df.select(F.col(id_col).alias("id"), words.alias("__w")).select(
         "id", "__w", F.size("__w").alias("__dl")
     )

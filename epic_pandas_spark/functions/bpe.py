@@ -32,17 +32,17 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from epic_pandas_spark.functions.text import split_words, words_expr
+
 
 def _word_freq_table(df: DataFrame, text_col: str) -> DataFrame:
-    """Corpus → (word, count): the only corpus-sized shuffle in training."""
+    """Corpus → (word, count): the only corpus-sized shuffle in training.
+    Shared by the BPE and unigram trainers."""
     from epic_pandas_spark.parallel import ensure_parallelism
 
     return (
-        ensure_parallelism(df).select(
-            F.explode(
-                F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-            ).alias("w")
-        )
+        ensure_parallelism(df)
+        .select(F.explode(words_expr(F.col(text_col))).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -188,7 +188,7 @@ def bpe_encode(
             if text is None:
                 return []
             toks: list = []
-            for word in text.lower().strip().split():
+            for word in split_words(text):
                 toks.extend(enc_word(word))
             return toks
 
@@ -247,7 +247,5 @@ def bpe_train_reference(texts: list[str], n_merges: int) -> list[tuple[str, str]
 
     freq: Counter = Counter()
     for t in texts:
-        for w in t.lower().strip().split():
-            if w:
-                freq[w] += 1
+        freq.update(split_words(t))
     return _train_on_freq(dict(freq), n_merges)

@@ -40,6 +40,8 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from epic_pandas_spark.functions.text import split_words, words_expr
+
 MAX_ORDER = 5
 
 
@@ -80,10 +82,7 @@ def _token_stream_expr(text: Column, order: int) -> Column:
     position has no such context. The split result is let-bound via a
     one-element transform (interpreted HOF trees do no CSE — see
     word_ngrams_expr), so the regex runs once per doc."""
-    w = F.filter(
-        F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " "),
-        lambda t: t != "",
-    )
+    w = F.filter(words_expr(text), lambda t: t != "")
 
     def _body(w0: Column) -> Column:
         # F.get is 0-based and yields null out-of-bounds (incl. negative),
@@ -450,15 +449,11 @@ def ngram_lm_score_reference(
     1-5): returns ``{id: (n_tokens, avg_logprob)}`` under identical
     semantics — longest available gram, alpha^(m-j) fall-through,
     add-one unigram floor."""
-    import re
     from collections import Counter
-
-    def words(t: str) -> list[str]:
-        return [w for w in re.sub(r"\s+", " ", t.strip().lower()).split(" ") if w]
 
     counts: list[Counter] = [Counter() for _ in range(order)]
     for t in train_texts:
-        ws = words(t)
+        ws = split_words(t)
         for k in range(1, order + 1):
             counts[k - 1].update(
                 tuple(ws[i - k + 1 : i + 1]) for i in range(k - 1, len(ws))
@@ -469,7 +464,7 @@ def ngram_lm_score_reference(
     denom = n_tokens + vocab
     out: dict[object, tuple[int, float]] = {}
     for did, t in score_docs:
-        ws = words(t)
+        ws = split_words(t)
         if not ws:
             continue
         total = 0.0

@@ -1,14 +1,31 @@
-"""Text-analysis expression builders for the LLM-data-pipeline tier
+r"""Text-analysis expression builders for the LLM-data-pipeline tier
 (extension layer; no reference analog — SURVEY.md §7.1 step 9).
 
 All pure Column expressions (whole-stage codegen, zero Python in the hot
 path): token counting, quality scoring, n-gram-heuristic language ID, and
 document fingerprinting.
+
+This module owns the two text normalizations every text operator uses:
+
+- **Word rule** (``normalized_text_expr``, ``words_expr``): lowercase,
+  ``trim``, collapse each ``\s+`` run to one space, split on ``" "``.
+  ``split_words`` is its Python mirror for driver-side and UDF code.
+  Java's regex ``\s`` is exactly the six ASCII whitespace characters
+  ``[ \t\n\x0B\f\r]``, so NBSP (U+00A0), em-space (U+2003) and the
+  ``\x1c``-``\x1f`` separators are word characters; Python's
+  ``str.split()`` splits on all of them, which is why the mirror does not
+  use it.
+- **Char-gram rule** (``chargram_text_expr``): lowercase and collapse
+  ``\s+`` runs, with no ``trim`` — character shingles keep the edge
+  whitespace as a space.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
+
+# Java's \s: the six ASCII whitespace characters (no Unicode spaces)
+_JAVA_WS_TO_SPACE = str.maketrans("\t\n\x0b\x0c\r", "     ")
 
 # minimal stopword marker sets per language for the n-gram heuristic
 _LANG_MARKERS = {
@@ -17,6 +34,37 @@ _LANG_MARKERS = {
     "fr": [" le ", " la ", " et ", " les "],
     "es": [" el ", " de ", " que ", " los "],
 }
+
+
+def normalized_text_expr(text: Column) -> Column:
+    """The word rule's normalized text: lowercase, trim, and one space
+    per ``\\s+`` run."""
+    return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
+
+
+def words_expr(text: Column) -> Column:
+    """The word rule's word array: ``normalized_text_expr`` split on
+    ``" "``. Empty or edge-whitespace text yields ``""`` entries; each
+    caller filters them (or counts them) as it needs."""
+    return F.split(normalized_text_expr(text), " ")
+
+
+def split_words(text: str) -> list[str]:
+    """Python mirror of ``words_expr`` with the empty tokens dropped:
+    the lowercased text split on runs of Java's ``\\s`` characters."""
+    return [w for w in text.lower().translate(_JAVA_WS_TO_SPACE).split(" ") if w]
+
+
+def chargram_text_expr(text: Column) -> Column:
+    """The char-gram rule: lowercase and one space per ``\\s+`` run, but
+    no trim, unlike the word rule — a leading or trailing whitespace run
+    stays a space in the character shingles. Callers MUST materialize
+    this as its own projection (withColumn/select) before a
+    higher-order function reads it: an expression referenced inside a
+    lambda is re-evaluated per array element, so inlining the regex
+    costs O(len) regex passes per doc (measured 7x wall time on the
+    sf0.1 corpus)."""
+    return F.regexp_replace(F.lower(text), r"\s+", " ")
 
 
 def token_count_expr(text: Column) -> Column:
@@ -89,7 +137,7 @@ def fingerprint_expr(text: Column, normalize: bool = True) -> Column:
     shingle fingerprint lives in extensions.dedup.)"""
     t = text
     if normalize:
-        t = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
+        t = normalized_text_expr(text)
     return F.xxhash64(t)
 
 
@@ -97,7 +145,7 @@ def ngrams_expr(text: Column, n: int = 3) -> Column:
     """Character n-gram (shingle) array of the normalized text — basis for
     Jaccard/MinHash dedup. Built with sequence+transform: stays in codegen,
     no UDF."""
-    t = F.regexp_replace(F.lower(text), r"\s+", " ")
+    t = chargram_text_expr(text)
     length = F.length(t)
     starts = F.sequence(F.lit(1), F.greatest(length - F.lit(n - 1), F.lit(1)))
     return F.when(length >= n, F.transform(starts, lambda i: F.substring(t, i, n))).otherwise(
@@ -122,7 +170,7 @@ def word_ngrams_expr(text: Column, n: int = 3, distinct: bool = True) -> Column:
     do no common-subexpression elimination: referencing the split
     expression from each of the n shifted copies re-runs the regex n
     times per doc (measured 3× wall time at n=13 on the sf0.1 corpus)."""
-    w = F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " ")
+    w = words_expr(text)
     big = 1 << 30
 
     def _body(w0: Column) -> Column:
@@ -157,9 +205,7 @@ def build_vocab(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        ).alias("token")
+        F.explode(words_expr(F.col(text_col))).alias("token")
     ).filter(F.col("token") != "")
     counts = (
         toks.groupBy("token")
@@ -213,9 +259,7 @@ def tfidf_top_terms(df, text_col: str, id_col: str, k: int = 3):
 
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        ).alias("token"),
+        F.explode(words_expr(F.col(text_col))).alias("token"),
     ).filter(F.col("token") != "")
     tf = (
         toks.groupBy(id_col, "token")
@@ -260,13 +304,7 @@ def encode_tokens(
     toks = df.select(
         F.col(id_col).alias("__id"),
         F.posexplode(
-            F.filter(
-                F.split(
-                    F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "),
-                    " ",
-                ),
-                lambda t: t != "",
-            )
+            F.filter(words_expr(F.col(text_col)), lambda t: t != "")
         ).alias("__pos", "token"),
     )
     mapped = toks.join(F.broadcast(vocab.select("token", "token_id")), "token", "left")

@@ -53,25 +53,10 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from epic_pandas_spark.functions.bpe import _word_freq_table
+from epic_pandas_spark.functions.text import split_words
+
 _Q = 1 << 20  # integer micro-count quantum (bit-stable grouped sums)
-
-
-def _norm_words_expr(text_col: str):
-    return F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
-
-
-def _word_freq_table(df: DataFrame, text_col: str) -> DataFrame:
-    from epic_pandas_spark.parallel import ensure_parallelism
-
-    return (
-        ensure_parallelism(df)
-        .select(F.explode(_norm_words_expr(text_col)).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 def _seed_vocab(words: DataFrame, max_piece_len: int, seed_size: int) -> list:
@@ -398,9 +383,7 @@ def unigram_train_reference(
 
     freq: Counter = Counter()
     for t in texts:
-        for w in t.lower().strip().split():
-            if w:
-                freq[w] += 1
+        freq.update(split_words(t))
     # seed: same (count x len) scoring + all chars, same tie-break
     subs: Counter = Counter()
     chars = set()
@@ -480,7 +463,7 @@ def unigram_encode(
             if text is None:
                 return []
             toks: list = []
-            for word in text.lower().strip().split():
+            for word in split_words(text):
                 seg = memo.get(word)
                 if seg is None:
                     seg = _viterbi(word, lp, max_len)

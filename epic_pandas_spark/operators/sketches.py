@@ -568,6 +568,15 @@ def cms_heavy_hitters(
     )
 
 
+def md5_hash60(c):
+    """Non-negative 60-bit hash of a string column: the first 15 hex
+    digits of its md5. DuckDB replays it exactly as
+    ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``, which is why the
+    oracle-checked sketch, simhash and bucket queries use it instead of
+    xxhash64 (pass ``hash_bits=60`` to the KMV estimators)."""
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
 def kmv_sketch(df: DataFrame, key, k: int = 1024, hash_expr=None) -> DataFrame:
     """Bottom-k (KMV / k-minimum-values) distinct sketch: the ``k``
     smallest DISTINCT hash values of ``key`` — a k-row, single-column

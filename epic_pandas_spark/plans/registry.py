@@ -18,6 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from epic_pandas_spark.functions.text import normalized_text_expr, words_expr
 from epic_pandas_spark.operators import (
     value_counts,
     value_counts_binned,
@@ -35,6 +36,7 @@ from epic_pandas_spark.operators import (
     split_with_overlap,
 )
 from epic_pandas_spark.operators.dedup import n_distinct_rows  # noqa: F401 (public registry surface)
+from epic_pandas_spark.operators.sketches import md5_hash60
 from epic_pandas_spark.session import load_table
 
 # name -> (spark_fn(spark, sf_dir) -> DataFrame, oracle_sql | None)
@@ -1194,9 +1196,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " ")
-            ).alias("token"),
+            F.explode(words_expr(F.col("text"))).alias("token"),
         )
         .filter(F.col("token") != "")
         .localCheckpoint(eager=False)  # scanned for the vocab AND the join
@@ -1329,9 +1329,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from epic_pandas_spark.extensions.dedup import simhash_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    md5_60 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
     out = simhash_pairs(
-        docs, "text", "doc_id", max_hamming=3, n_bits=60, token_hash=md5_60
+        docs, "text", "doc_id", max_hamming=3, n_bits=60, token_hash=md5_hash60
     )
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
@@ -2412,7 +2411,7 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ").alias("tokens"),
+        words_expr(F.col("text")).alias("tokens"),
     )
     chunks = split_with_overlap(toks, "tokens", length=50, overlap=10, partials=False)
     full = chunks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_chunks"))
@@ -2557,9 +2556,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     init = (
         emb.select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v"))
         .orderBy(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            .asc(),
+            md5_hash60(F.col("vec_id").cast("string")).asc(),
             F.col("vec_id").asc(),
         )
         .limit(4)
@@ -3374,15 +3371,12 @@ def q_kmv_corpus_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy band is pytest-witnessed separately."""
     from epic_pandas_spark.operators.sketches import kmv_jaccard, kmv_sketch
 
-    def h60(c):
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    a = kmv_sketch(docs.filter(F.col("text").isNotNull()), norm, k=256, hash_expr=h60)
+    norm = normalized_text_expr(F.col("text"))
+    a = kmv_sketch(docs.filter(F.col("text").isNotNull()), norm, k=256, hash_expr=md5_hash60)
     b = kmv_sketch(
         docs.filter(F.col("text").isNotNull() & (F.col("doc_id") % 2 == 0)),
-        norm, k=256, hash_expr=h60,
+        norm, k=256, hash_expr=md5_hash60,
     )
     return kmv_jaccard(a, b, 256).select(
         "k_used", "n_common", F.round("jaccard_est", 6).alias("jaccard_est")
@@ -3416,14 +3410,11 @@ def q_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance band."""
     from epic_pandas_spark.operators.sketches import kmv_rollup, kmv_sketches
 
-    def h60(c):
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("lang").isNotNull()
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=h60)
+    norm = normalized_text_expr(F.col("text"))
+    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=md5_hash60)
     return kmv_rollup(store, [], 128)
 
 
@@ -3470,14 +3461,11 @@ def q_kmv_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets is the kmv_jaccard pytest witness)."""
     from epic_pandas_spark.operators.sketches import kmv_jaccard_matrix, kmv_sketches
 
-    def h60(c):
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("lang").isNotNull()
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=h60)
+    norm = normalized_text_expr(F.col("text"))
+    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=md5_hash60)
     out = kmv_jaccard_matrix(store, ["lang"], 128)
     return out.select(
         "lang_a", "lang_b", "k_used", "n_a", "n_b", "n_common",
@@ -3536,15 +3524,12 @@ def q_kmv_set_cardinalities(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_sketch,
     )
 
-    def h60(c):
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    a = kmv_sketch(docs.filter(F.col("text").isNotNull()), norm, k=256, hash_expr=h60)
+    norm = normalized_text_expr(F.col("text"))
+    a = kmv_sketch(docs.filter(F.col("text").isNotNull()), norm, k=256, hash_expr=md5_hash60)
     b = kmv_sketch(
         docs.filter(F.col("text").isNotNull() & (F.col("doc_id") % 2 == 0)),
-        norm, k=256, hash_expr=h60,
+        norm, k=256, hash_expr=md5_hash60,
     )
     out = kmv_set_cardinalities(a, b, 256, hash_bits=60)
     return out.select(
@@ -3613,14 +3598,11 @@ def q_kmv_setops_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_sketches,
     )
 
-    def h60(c):
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("lang").isNotNull()
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=h60)
+    norm = normalized_text_expr(F.col("text"))
+    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=md5_hash60)
     out = kmv_setops_matrix(store, ["lang"], 128, hash_bits=60)
     return out.select(
         "lang_a", "lang_b", "k_used", "n_a", "n_b", "n_common",
@@ -4314,10 +4296,7 @@ def q_quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         labeled, "text", "label", "doc_id", n_buckets=512, iters=6, lr=5.0,
         # portable bucket hash so the DuckDB oracle replays the identical
         # feature table (default is xxhash64, which DuckDB lacks)
-        bucket_expr=lambda tok: F.pmod(
-            F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long"),
-            F.lit(512),
-        ),
+        bucket_expr=lambda tok: F.pmod(md5_hash60(tok), F.lit(512)),
     )
     return w_df.select("bucket", F.round("w", 4).alias("w")).orderBy("bucket")
 
@@ -6261,11 +6240,7 @@ def q_pagerank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # event types become synthetic node ids above the user range;
         # md5-arithmetic (not xxhash64) so the DuckDB oracle replays the
         # same node mapping
-        (
-            F.conv(F.substring(F.md5("event_type"), 1, 15), 16, 10).cast("long")
-            % 1000
-            + 10_000_000
-        ).alias("dst"),
+        (md5_hash60("event_type") % 1000 + 10_000_000).alias("dst"),
     )
     ranks = pagerank(ev, n_iter=8)
     return ranks.agg(

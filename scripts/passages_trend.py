@@ -64,9 +64,9 @@ def run_tier(sf_dir: str, skew: bool) -> dict:
     from epic_pandas_spark.extensions.dedup import (
         _AUTO_GRAM_FREQ,
         _gram_hashes_expr,
-        _normalized_text_expr,
         repeated_passage_pairs,
     )
+    from epic_pandas_spark.functions.text import chargram_text_expr
 
     spark = measure.session("passages_trend", sf_dir)
     u = _corpus(spark, sf_dir, skew)
@@ -84,7 +84,7 @@ def run_tier(sf_dir: str, skew: bool) -> dict:
     # natural duplication alone before this gate existed).
     inv = u.select(
         F.col("doc_id").alias("id"),
-        _normalized_text_expr(F.col("text")).alias("__t"),
+        chargram_text_expr(F.col("text")).alias("__t"),
     ).select(
         "id",
         F.explode(F.array_distinct(_gram_hashes_expr(F.col("__t"), 50))).alias("gh"),

@@ -26,9 +26,11 @@ import measure
 def run_tier(sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
+    from epic_pandas_spark.functions.text import normalized_text_expr
     from epic_pandas_spark.operators.sketches import (
         kmv_setops_matrix,
         kmv_sketches,
+        md5_hash60,
         quantile_anchor_rollup,
         quantile_anchor_sketches,
     )
@@ -36,17 +38,14 @@ def run_tier(sf_dir: str) -> dict:
 
     spark = measure.session("sketch_store_trend", sf_dir, "documents")
 
-    def h60(c):
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
     out: dict = {}
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("lang").isNotNull()
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+    norm = normalized_text_expr(F.col("text"))
     t0 = time.monotonic()
-    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=h60).localCheckpoint(
+    store = kmv_sketches(docs, ["lang"], norm, k=128, hash_expr=md5_hash60).localCheckpoint(
         eager=True  # materialize: the estimate phase must not re-run the scan
     )
     out["kmv_store_rows"] = store.count()

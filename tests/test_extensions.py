@@ -1693,6 +1693,7 @@ def test_winnow_flagged_join_strategy_pinned(spark, monkeypatch):
     BroadcastExchange and the candidate set must equal the broadcast
     path's — and the full operator must stay bit-identical."""
     from epic_pandas_spark.extensions import dedup as dd
+    from epic_pandas_spark.functions.text import chargram_text_expr
     from pyspark.sql import functions as F
 
     # duplication-SATURATED corpus: every doc shares the boiler sentence
@@ -1701,7 +1702,7 @@ def test_winnow_flagged_join_strategy_pinned(spark, monkeypatch):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     docs_n = df.select(
         F.col("doc_id").alias("__id"),
-        dd._normalized_text_expr(F.col("text")).alias("__t"),
+        chargram_text_expr(F.col("text")).alias("__t"),
     ).withColumn("__len", F.length("__t"))
 
     cand_bc = dd._winnow_candidate_ids(docs_n, 40, 8, 2)
