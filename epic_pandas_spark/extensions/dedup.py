@@ -17,8 +17,9 @@ Four families, each with an explicit 100 TB story:
 - simhash:  64-bit weighted bit-majority fingerprint; near-dups =
             small hamming distance. Pure expression pipeline.
 
-All of these operate on arrays built by functions.text.ngrams_expr /
-word splitting — no Python in the hot path anywhere.
+All of these operate on shingle arrays built from functions.text's two
+normalizations (character shingles of ``chargram_text_expr``, word
+shingles of ``word_ngrams_expr``) — no Python in the hot path anywhere.
 """
 
 from __future__ import annotations

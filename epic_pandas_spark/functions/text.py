@@ -68,11 +68,14 @@ def chargram_text_expr(text: Column) -> Column:
 
 
 def token_count_expr(text: Column) -> Column:
-    """Whitespace token count; empty/null-safe."""
-    trimmed = F.trim(text)
-    return F.when(
-        trimmed.isNull() | (F.length(trimmed) == 0), F.lit(0)
-    ).otherwise(F.size(F.split(trimmed, r"\s+")))
+    """The word rule's word count: the non-empty entries of
+    ``words_expr``, so an edge tab or newline adds no token. Null and
+    all-whitespace text count 0. Counted as spaces + 1 of the trimmed
+    normalized text, without building the array."""
+    t = F.trim(normalized_text_expr(text))
+    return F.when(t.isNull() | (t == ""), F.lit(0)).otherwise(
+        F.length(t) - F.length(F.replace(t, F.lit(" "), F.lit(""))) + 1
+    )
 
 
 def _count_occurrences(text: Column, needle: str) -> Column:
@@ -139,18 +142,6 @@ def fingerprint_expr(text: Column, normalize: bool = True) -> Column:
     if normalize:
         t = normalized_text_expr(text)
     return F.xxhash64(t)
-
-
-def ngrams_expr(text: Column, n: int = 3) -> Column:
-    """Character n-gram (shingle) array of the normalized text — basis for
-    Jaccard/MinHash dedup. Built with sequence+transform: stays in codegen,
-    no UDF."""
-    t = chargram_text_expr(text)
-    length = F.length(t)
-    starts = F.sequence(F.lit(1), F.greatest(length - F.lit(n - 1), F.lit(1)))
-    return F.when(length >= n, F.transform(starts, lambda i: F.substring(t, i, n))).otherwise(
-        F.array(t)
-    )
 
 
 def word_ngrams_expr(text: Column, n: int = 3, distinct: bool = True) -> Column:

@@ -1569,13 +1569,17 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # extension tier: text analysis (functions/text.py)
 # ---------------------------------------------------------------------------
 
+# the word rule's token count (functions.text.token_count_expr) in DuckDB:
+# the runs outside Java's six \s characters, named explicitly because
+# RE2's \s lacks \x0B
+_TOKEN_COUNT_SQL = r"COALESCE(len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')), 0)"
+
 @register(
     "text_quality",
-    """
+    f"""
     SELECT doc_id,
            length(text) AS n_chars,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+           {_TOKEN_COUNT_SQL} AS n_tokens,
            ROUND(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE
              / GREATEST(length(text), 1), 6) AS alpha_ratio,
            ROUND((length(text) - length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
@@ -2034,13 +2038,12 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_curation",
-    """
+    f"""
     WITH scored AS (
       SELECT doc_id, text, lang,
              length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE
                / GREATEST(length(text), 1) AS alpha_ratio,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
+             {_TOKEN_COUNT_SQL} AS n_tokens
       FROM documents
     ), filtered AS (
       SELECT * FROM scored WHERE n_tokens >= 20 AND alpha_ratio >= 0.7
@@ -2425,11 +2428,10 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sequence_packing",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
+             {_TOKEN_COUNT_SQL} AS n_tokens
       FROM documents
     ), packed AS (
       SELECT shard, doc_id, n_tokens,
@@ -4421,10 +4423,10 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_report",
-    """
+    f"""
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(len(string_split(trim(text), ' '))) AS BIGINT) AS total_tokens,
+           CAST(SUM({_TOKEN_COUNT_SQL}) AS BIGINT) AS total_tokens,
            ROUND(AVG(n_chars), 6) AS avg_chars,
            ROUND(quantile_cont(n_chars, 0.5), 6) AS p50_chars,
            ROUND(quantile_cont(n_chars, 0.95), 6) AS p95_chars
@@ -4435,8 +4437,8 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus report card per language: doc counts, token totals, and
     exact length percentiles in ONE aggregation pass over the corpus —
     the summary a curation run emits before/after each filter stage.
-    (The synthetic corpus is single-space separated, so the whitespace
-    token count is a plain split on ' ' in both engines.)"""
+    Tokens follow the word rule (``token_count_expr``, and
+    ``_TOKEN_COUNT_SQL`` in the oracle)."""
     from epic_pandas_spark.functions.text import token_count_expr
 
     docs = load_table(spark, sf_dir, "documents")

@@ -8,6 +8,9 @@ harness and a real multi-executor cluster:
 - Arrow on, so pandas_udf / applyInPandas / toPandas use columnar batches.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
+- Stream checkpoints on a ``local[...]`` master go through Hadoop's
+  FileSystem API, not FileContext: without libhadoop, every FileContext
+  rename forks a ``readlink`` per checkpoint file (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -35,6 +38,17 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or local[*]).
     On a real cluster, pass ``master=None`` with spark-submit providing the
     master URL, or set it explicitly.
+
+    On a ``local[...]`` master, stream checkpoints (offset and commit
+    logs, state-store deltas, the file-sink log) are written by Spark's
+    ``FileSystemBasedCheckpointFileManager`` instead of the default
+    FileContext one. Without the native Hadoop library, FileContext's
+    rename asks ``RawLocalFileSystem.getFileLinkStatus``, which forks a
+    ``readlink`` process for every checkpoint file; the FileSystem
+    manager does the same existence check and rename without them. On
+    ``file:`` paths both give the same guarantee, because FileContext's
+    rename reaches the same ``FileSystem.rename`` through
+    ``DelegateToFileSystem``. Other masters keep Spark's default.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -75,6 +89,14 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local["):
+        # local disk only: a cluster master keeps Spark's FileContext
+        # manager, whose atomic rename HDFS provides natively
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -124,20 +124,40 @@ def ratios(tiers: dict[str, dict], **keys: str) -> None:
                 t[f"{name}_ratio_vs_{base_label}"] = round(t[key] / base[key], 2)
 
 
+def pid_counter() -> tuple[int, int] | None:
+    """The last PID allocated in this PID namespace and `pid_max`, or
+    None where `/proc/sys/kernel/ns_last_pid` is absent (not Linux, or
+    no procfs)."""
+    try:
+        with open("/proc/sys/kernel/ns_last_pid") as f:
+            last = int(f.read())
+        with open("/proc/sys/kernel/pid_max") as f:
+            return last, int(f.read())
+    except OSError:
+        return None
+
+
 def timed(spark, fn, sf_dir: str) -> dict:
     """Build `fn(spark, sf_dir)` and write it to the noop sink under a job
-    group of its own. Returns the wall seconds (`sec`) and the group's
-    stage counters (`perfbench/counters.py`). The session is reset after
-    the clock stops, as in bench.py, also when the run raises."""
+    group of its own. Returns the wall seconds (`sec`), the PIDs
+    allocated host-wide (in this PID namespace), threads included, over
+    the same region (`pids`: the `ns_last_pid` delta modulo `pid_max`,
+    None without procfs; a process-spawning path shows up here), and
+    the group's stage counters (`perfbench/counters.py`). The session is
+    reset after the clock stops, as in bench.py, also when the run
+    raises."""
     from epic_pandas_spark.session import reset_session_state
 
     group = f"measure:{uuid.uuid4().hex}"
     counters.set_group(spark, group)
     try:
+        p0 = pid_counter()
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         sec = round(time.perf_counter() - t0, 4)
-        return {"sec": sec, **counters.phase_counters(spark, group)}
+        p1 = pid_counter()
+        pids = None if p0 is None or p1 is None else (p1[0] - p0[0]) % p1[1]
+        return {"sec": sec, "pids": pids, **counters.phase_counters(spark, group)}
     finally:
         reset_session_state(spark)
 

@@ -100,3 +100,35 @@ def test_tiers_cover_the_generated_decades():
         ("sf0.01", 1), ("sf0.1", 10), ("sf1", 100), ("sf10", 1000), ("sf100", 10000),
     ]
     assert all(d == os.path.join(REPO, ".scaledata", label) for label, d, _ in measure.TIERS)
+
+
+class _NoopFrame:
+    """Stands in for a DataFrame: `.write.format(...).mode(...).save()`."""
+
+    def __getattr__(self, name):
+        return self
+
+    def __call__(self, *args):
+        return self
+
+
+@pytest.mark.parametrize(
+    "readings, pids",
+    [
+        ([(1000, 32768), (1279, 32768)], 279),
+        ([(32760, 32768), (12, 32768)], 20),  # the counter wrapped past pid_max
+        ([None, None], None),  # no /proc/sys/kernel/ns_last_pid
+    ],
+)
+def test_timed_reports_pids_over_the_timed_region(monkeypatch, readings, pids):
+    from epic_pandas_spark import session
+
+    calls = iter(readings)
+    monkeypatch.setattr(measure, "pid_counter", lambda: next(calls))
+    monkeypatch.setattr(measure.counters, "set_group", lambda spark, group: None)
+    monkeypatch.setattr(measure.counters, "phase_counters", lambda spark, group: {"jobs": 1})
+    monkeypatch.setattr(session, "reset_session_state", lambda spark: None)
+    out = measure.timed(None, lambda spark, sf_dir: _NoopFrame(), "unused")
+    assert out["pids"] == pids
+    assert out["jobs"] == 1 and out["sec"] >= 0
+    assert next(calls, "done") == "done"  # read once before, once after

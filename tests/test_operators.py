@@ -505,14 +505,6 @@ def test_coo_elementwise_matches_dense(spark):
             assert abs(got[k] - expected[k]) < 1e-9, op
 
 
-def test_char_ngrams_expr(spark):
-    from epic_pandas_spark.functions.text import ngrams_expr
-
-    df = spark.createDataFrame([("abcd",)], "t string")
-    grams = df.select(ngrams_expr(F.col("t"), 3).alias("g")).first()["g"]
-    assert grams == ["abc", "bcd"]
-
-
 def test_word_ngrams_short_doc_empty(spark):
     from epic_pandas_spark.functions.text import word_ngrams_expr
 

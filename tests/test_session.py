@@ -50,3 +50,10 @@ def test_failed_query_does_not_damage_the_next(spark):
         .collect()
     )
     assert [(r.k, r.n, r.s) for r in rows] == [(0, 34, 1683), (1, 33, 1617), (2, 33, 1650)]
+
+
+def test_local_session_writes_checkpoints_through_filesystem(spark):
+    # without libhadoop, Spark's default FileContext manager forks a
+    # `readlink` per checkpoint file; local masters use the FileSystem one
+    manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert manager.endswith(".FileSystemBasedCheckpointFileManager")

@@ -399,6 +399,82 @@ def test_streaming_end_to_end_restart_resume_exactly_once(spark, tmp_path):
     assert {(r["window_start"], r["approx_distinct"]) for r in rows} == want
 
 
+def test_tumbling_agg_update_mode_resumes_from_checkpoint(spark, tmp_path):
+    """Stop and restart an update-mode windowed aggregation on the same
+    checkpoint: the state-store deltas and the offset and commit logs the
+    first run wrote are read back by the second. The last emission per
+    (window, event type) across both runs equals the batch twin over all
+    input, and the offset and commit logs hold the same contiguous batch
+    ids."""
+    events = load_table(spark, SF_DIR, "events").select("ts", "event_type", "value")
+    staged, ckpt = tmp_path / "staged", str(tmp_path / "ckpt")
+    staged.mkdir()
+    # four shards split by time range, landed in event-time order (the
+    # file source reads by modification time), so no row is late
+    cuts = [r[0] for r in events.select(
+        F.explode(F.percentile_approx(F.unix_micros("ts"), [0.25, 0.5, 0.75]))
+    ).collect()]
+    bounds = list(zip([None, *cuts], [*cuts, None]))
+    mtime = 1_700_000_000
+
+    def land(shard: int) -> None:
+        lo, hi = bounds[shard]
+        part = events
+        if lo is not None:
+            part = part.filter(F.unix_micros("ts") >= lo)
+        if hi is not None:
+            part = part.filter(F.unix_micros("ts") < hi)
+        out = str(tmp_path / f"shard={shard}")
+        part.coalesce(1).write.parquet(out)
+        (src,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        dst = staged / f"s{shard}.parquet"
+        os.rename(os.path.join(out, src), dst)
+        os.utime(dst, (mtime + shard, mtime + shard))
+
+    emitted = []  # (batch id, row); the memory sink cannot resume in update mode
+
+    def run() -> None:
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(staged))
+        )
+        q = (
+            tumbling_agg(stream, watermark="2 hours")
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda df, batch_id: emitted.extend((batch_id, r) for r in df.collect()))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    land(0)
+    land(1)
+    run()
+    land(2)
+    land(3)
+    run()
+
+    last = {}
+    for _, r in sorted(emitted, key=lambda e: e[0]):
+        last[(r["window_start"], r["event_type"])] = (r["n_events"], round(r["sum_value"], 6))
+    want = {
+        (r["window_start"], r["event_type"]): (r["n_events"], round(r["sum_value"], 6))
+        for r in tumbling_agg(events).collect()
+    }
+    assert last == want
+
+    def batch_ids(log: str) -> list[int]:
+        return sorted(int(f) for f in os.listdir(os.path.join(ckpt, log)) if f.isdigit())
+
+    assert batch_ids("offsets") == batch_ids("commits") == list(range(len(batch_ids("commits"))))
+    assert len(batch_ids("commits")) >= 4  # one batch per shard at least
+
+
 _TWS_SCENARIO = r"""
 import json, os, sys, tempfile
 

@@ -8,9 +8,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from epic_pandas_spark.functions.text import split_words, words_expr
+from epic_pandas_spark.functions.text import split_words, token_count_expr, words_expr
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "epic_pandas_spark")
@@ -69,6 +70,25 @@ def test_split_words_mirrors_words_expr(spark):
     for i, t in enumerate(_TEXTS):
         want = None if t is None else split_words(t)
         assert (None if got[i] is None else list(got[i])) == want, repr(t)
+
+
+@pytest.mark.parametrize(
+    "text, n",
+    [("\tfoo bar", 2), ("foo bar\n", 2), ("", 0), (None, 0), ("   ", 0), ("a\u00a0b", 1)],
+)
+def test_token_count_is_the_word_rule_count(spark, text, n):
+    """``token_count_expr`` counts the word rule's non-empty words (an
+    edge tab or newline adds none), and the registry oracle's token count
+    agrees with it."""
+    import duckdb
+
+    from epic_pandas_spark.plans.registry import _TOKEN_COUNT_SQL
+
+    df = spark.createDataFrame([(text,)], "text string")
+    assert df.select(token_count_expr(F.col("text"))).first()[0] == n
+    assert len(split_words(text or "")) == n
+    sql = f"SELECT {_TOKEN_COUNT_SQL} FROM (SELECT $1::VARCHAR AS text)"
+    assert duckdb.sql(sql, params=[text]).fetchone()[0] == n
 
 
 def test_bpe_encode_keeps_nbsp_words_whole(spark):
